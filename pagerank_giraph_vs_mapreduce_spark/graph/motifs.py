@@ -1220,14 +1220,6 @@ def multilevel_partition_k2_vcycle(
     return part.select(F.col("super").alias("id"), "part")
 
 
-# Worker count for k4's two independent side bisections (guide §2.6
-# back-fill overlap). A module-level constant — not a hard-coded pool
-# size — so tools/k4_overlap_probe.py can pin the serial arm (=1) at the
-# call site instead of monkey-patching concurrent.futures process-wide
-# (r13 ADVICE: the global patch also capped PySpark's own pools).
-K4_SIDE_POOL_WORKERS = 2
-
-
 def multilevel_partition_k4(
     edges: DataFrame,
     top_levels: tuple[int, ...] = (3, 2, 2),
@@ -1244,12 +1236,7 @@ def multilevel_partition_k4(
     two side pipelines are independent plans over disjoint edge sets —
     at scale they run concurrently, which is the METIS cost argument
     (k-way ~ log2(k) x one-bisection work over a shrinking graph). The
-    driver overlaps them too (guide §2.6): each side's pipeline is a
-    chain of small eager actions, so run serially one side's stragglers
-    leave the cluster idle while the other side waits its turn — a
-    2-thread pool lets side 1's jobs back-fill side 0's tail. Results
-    are unaffected (each side is a deterministic function of its edge
-    set; FIFO scheduling only changes timing)."""
+    driver runs the two sides one after the other."""
     # ONE materialization of the symmetrized weighted leaf table, shared
     # by the top bisection (via sym_edges) AND both side semi-joins —
     # previously the top call materialized its own copy of the identical
@@ -1293,22 +1280,7 @@ def multilevel_partition_k4(
         )
         return sub.select("id", F.col("part").alias(f"sp{side}"))
 
-    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
-
-    pool = ThreadPoolExecutor(max_workers=K4_SIDE_POOL_WORKERS)
-    try:
-        futures = [pool.submit(_side_assign, side) for side in (0, 1)]
-        # Fail fast (r13 ADVICE): if one side raises, surface it now —
-        # a `with` block's implicit shutdown would silently wait for the
-        # other side to run to completion first.
-        wait(futures, return_when=FIRST_EXCEPTION)
-        for f in futures:
-            if f.done() and f.exception() is not None:
-                pool.shutdown(wait=False, cancel_futures=True)
-                raise f.exception()
-        subs = [f.result() for f in futures]
-    finally:
-        pool.shutdown(wait=False)
+    subs = [_side_assign(side) for side in (0, 1)]
     return (
         top.join(subs[0], "id", "left")
         .join(subs[1], "id", "left")

@@ -19,13 +19,19 @@ Semantics (both reference engines agree on these, SURVEY.md §2.8/§4.3):
   reference engines already disagree at ~1e-10 because of it.
 
 Execution shape (the whole point of the Spark design):
+- one superstep driver, ``_supersteps``, runs every single-vector kernel:
+  uniform ``pagerank``, ``personalized_pagerank`` (the same loop with a
+  static ``reset`` column in the update rule) and ``pagerank_weighted``
+  (the same loop with a ``pr * w / wsum`` edge share). Each kernel is a
+  short setup that hands the driver its links table, its initial ranks
+  and its update rule.
 - graph structure (``links``) is shuffled ONCE at build, partitioned by src,
   and cached; each superstep re-shuffles only the V-row ranks table.
 - per-superstep driver work is two actions: the scatter+gather+update plan,
   and one global aggregate returning (Σ|Δ|, dangling mass, Σpr) in a single
   pass — replacing the reference's three fixed-point Hadoop counters
   (MR/PageRankDriver.java:195-216) and Giraph DoubleSumAggregators.
-- eager ``localCheckpoint`` EVERY superstep truncates lineage (the Spark
+- ``localCheckpoint`` EVERY superstep truncates lineage (the Spark
   analog of the reference's iteration-dir GC, MR/PageRankDriver.java:177-185).
   This is load-bearing: each superstep references the previous ranks twice
   (scatter join + update join), so without truncation the logical plan —
@@ -41,7 +47,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -124,10 +130,14 @@ def latest_checkpoint(spark, checkpoint_dir: str):
 
 
 def scatter_gather(
-    links: DataFrame, ranks: DataFrame, hub_ids: list[int] | None = None
+    links: DataFrame,
+    ranks: DataFrame,
+    hub_ids: list[int] | None = None,
+    share: Column | None = None,
 ) -> DataFrame:
-    """One J1/C2/A1 superstep message pass: scatter pr/outdeg along the
-    cached links, gather by dst. ``hub_ids`` (hot out-degree sources,
+    """One J1/C2/A1 superstep message pass: scatter ``share`` (default
+    pr/outdeg; the weighted kernel passes pr*w/wsum) along the cached
+    links, gather by dst. ``hub_ids`` (hot out-degree sources,
     precomputed once per graph) routes the hub edge mass through a
     BROADCAST join of just those sources' ranks — the hub rows never
     shuffle and never pile one join partition onto one task.
@@ -142,24 +152,26 @@ def scatter_gather(
     bounds their count at E/cap), so their (src, pr) rows broadcast for
     pennies while their edge rows — the actual mass — stay put.
 
-    PLACED mode (links carries a ``part`` column — see
-    graph/placement.py:build_placed_graph): the join runs on
+    PLACED mode (ranks carry the static ``part`` label that ``pagerank``
+    adds for a placed build — see graph/placement.py:build_placed_graph;
+    the links then carry it too): the join runs on
     (part, src) instead of src. src functionally determines part, so
     the join is semantically identical, but the cached links side's
     HashPartitioning([part]) satisfies the clustered distribution and
     the E rows never re-shuffle; the scatter output stays part-local,
     which is what shrinks the gather exchange under a low-cut
     placement."""
-    placed = "part" in links.columns
+    placed = "part" in ranks.columns
     if placed:
         ranks_src = ranks.select(F.col("id").alias("src"), "pr", "part")
         join_keys: list[str] | str = ["part", "src"]
     else:
         ranks_src = ranks.select(F.col("id").alias("src"), "pr")
         join_keys = "src"
+    if share is None:
+        share = F.col("pr") / F.col("outdeg")
     contrib = lambda df: df.select(  # noqa: E731
-        F.col("dst").alias("id"),
-        (F.col("pr") / F.col("outdeg")).alias("contrib"),
+        F.col("dst").alias("id"), share.alias("contrib")
     )
     if hub_ids:
         hot = F.col("src").isin(hub_ids)
@@ -175,6 +187,139 @@ def scatter_gather(
     else:
         scattered = contrib(links.join(ranks_src, join_keys))
     return scattered.groupBy("id").agg(F.sum("contrib").alias("contrib"))
+
+
+def _dangling_mass() -> Column:
+    return F.sum(F.when(F.col("dangling"), F.col("pr")).otherwise(0.0))
+
+
+def _init_ranks(
+    state: DataFrame, links: DataFrame, *cols: Column
+) -> tuple[DataFrame, float]:
+    """Rank init shared by the single-vector kernels: persist
+    (id, *cols, dangling) for every vertex of ``state`` — ``dangling``
+    is static, so each superstep's one stats action also yields the next
+    dangling mass (A4+A5+A6) — and take the first dangling mass. Callers
+    run it before stamping their build time: it is part of graph load,
+    the reference's Setup phase."""
+    out_src = links.select("src").distinct()
+    ranks = (
+        state.join(out_src, state.id == out_src.src, "left")
+        .select("id", *cols, F.col("src").isNull().alias("dangling"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    return ranks, float(ranks.agg(_dangling_mass()).first()[0] or 0.0)
+
+
+def _uniform_update(damping: float, n: int):
+    """C1 update with uniform teleport and same-iteration dangling
+    redistribution: (1-d)/N + d*(Σ contrib + dangling_sum/N)."""
+    base = (1.0 - damping) / n
+    return lambda contrib, dsum: F.lit(base) + F.lit(damping) * (
+        contrib + F.lit(dsum / n)
+    )
+
+
+def _supersteps(
+    links: DataFrame,
+    ranks: DataFrame,
+    dangling_sum: float,
+    update,
+    n: int,
+    max_iter: int,
+    tol: float,
+    min_iter: int,
+    share: Column | None = None,
+    hub_ids: list[int] | None = None,
+    phase_timing: bool = False,
+    checkpoint_dir: str | None = None,
+    checkpoint_every: int = 10,
+) -> PageRankResult:
+    """The superstep loop every single-vector PageRank kernel runs.
+
+    ``ranks`` is the persisted frame from ``_init_ranks``; each superstep
+    scatters ``share`` along ``links``, gathers by dst, and sets
+    ``pr = update(contrib, dangling_sum)``, where ``contrib`` is the
+    gathered mass (0.0 for a vertex no edge reaches) and
+    ``dangling_sum`` the dangling mass of the current ranks. Every other
+    ranks column (``dangling``, PPR's ``reset``, placed mode's ``part``)
+    rides along unchanged. The initial ranks are released on every exit
+    path; later ranks are checkpoint-backed."""
+    init = ranks
+    carry = [c for c in ranks.columns if c != "pr"]
+    history: list[IterationStats] = []
+    converged = False
+    try:
+        for i in range(max_iter):
+            t0 = time.monotonic()
+            # J1/C2 scatter + A1 gather: links is cached pre-partitioned by
+            # src, so only the V-row ranks side shuffles here; hub sources
+            # (if any) scatter via broadcast instead.
+            msgs = scatter_gather(links, ranks, hub_ids, share)
+            new = (
+                ranks.select(*carry, F.col("pr").alias("pr_old"))
+                .join(msgs, "id", "left")
+                .select(
+                    *carry,
+                    "pr_old",
+                    update(
+                        F.coalesce(F.col("contrib"), F.lit(0.0)), dangling_sum
+                    ).alias("pr"),
+                )
+            )
+            # Lazy localCheckpoint truncates the logical plan immediately
+            # (the returned DF is LogicalRDD-backed) while deferring
+            # materialization to the stats aggregate below — ONE action per
+            # superstep. Under phase_timing the checkpoint is eager instead,
+            # splitting the wall time into a compute job and a stats job.
+            t_plan = time.monotonic()
+            new = new.localCheckpoint(eager=phase_timing)
+            t_compute = time.monotonic()
+            stats = new.agg(
+                F.sum(F.abs(F.col("pr") - F.col("pr_old"))).alias("diff"),
+                _dangling_mass().alias("dsum"),
+                F.sum("pr").alias("total"),
+            ).first()
+            t_stats = time.monotonic()
+
+            ranks.unpersist()
+            ranks = new.select(*init.columns)
+            dangling_sum = float(stats["dsum"] or 0.0)
+            avg_diff = float(stats["diff"] or 0.0) / n
+            iterations = i + 1
+            history.append(
+                IterationStats(
+                    iteration=iterations,
+                    avg_diff=avg_diff,
+                    dangling_sum=dangling_sum,
+                    total_pr=float(stats["total"] or 0.0),
+                    seconds=time.monotonic() - t0,
+                    # The lazy localCheckpoint call spans physical planning
+                    # AND AQE query-stage materialization (.rdd on an
+                    # adaptive plan executes intermediate shuffle stages
+                    # synchronously), so on large graphs it is mostly
+                    # compute; it lands in compute either way, with plan
+                    # covering only DF construction.
+                    plan_seconds=t_plan - t0,
+                    compute_seconds=t_compute - t_plan,
+                    stats_seconds=t_stats - t_compute,
+                )
+            )
+            if iterations >= min_iter and avg_diff <= tol:
+                converged = True
+                break
+            if checkpoint_dir is not None and iterations % checkpoint_every == 0:
+                # One extra V-row action per checkpoint_every supersteps; the
+                # ranks are already materialized by the stats aggregate, so
+                # this rescans the LogicalRDD, not the superstep lineage.
+                ranks.select("id", "pr").write.mode("overwrite").parquet(
+                    f"{checkpoint_dir}/iter_{iterations:05d}"
+                )
+    finally:
+        init.unpersist()
+    return PageRankResult(
+        ranks.select("id", "pr"), n, len(history), converged, history
+    )
 
 
 def pagerank(
@@ -243,180 +388,82 @@ def pagerank(
             f"checkpoint_every must be >= 1, got {checkpoint_every}"
         )
     t_setup = time.monotonic()
+    spark = edges.sparkSession
     own_graph = graph is None
     g = graph or build_graph(edges)
-    n = g.n_vertices
-    if n == 0:
-        empty = edges.sparkSession.createDataFrame([], "id bigint, pr double")
-        return PageRankResult(empty, 0, 0, True, [])
-
-    base = (1.0 - damping) / n
-
-    # ranks carries a static `dangling` flag so the per-iteration global
-    # aggregate gets Σ|Δ|, dangling mass and Σpr in ONE pass (A4+A5+A6).
-    # A PLACED build (g.parts set) additionally carries the static
-    # `part` label so the scatter join can run on (part, src) against
-    # the part-distributed links cache — see scatter_gather.
-    placed = g.parts is not None
-    state_cols = ["id", "pr", "dangling"] + (["part"] if placed else [])
-    out_src = g.links.select("src").distinct()
-    base_state = g.vertices.join(out_src, g.vertices.id == out_src.src, "left")
-    if placed:
-        base_state = base_state.join(g.parts, "id")
-    if initial_ranks is None:
-        init_pr = F.lit(1.0 / n)
-        state = base_state
-    else:
-        state = base_state.join(
-            initial_ranks.select("id", F.col("pr").alias("pr0")), "id", "left"
-        )
-        init_pr = F.coalesce(F.col("pr0"), F.lit(1.0 / n))
-    ranks = (
-        state.select(
-            "id",
-            init_pr.alias("pr"),
-            F.col("src").isNull().alias("dangling"),
-            *(["part"] if placed else []),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    first = ranks.agg(
-        F.sum(F.when(F.col("dangling"), F.col("pr")).otherwise(0.0)).alias("dsum")
-    ).first()
-    dangling_sum = float(first["dsum"] or 0.0)
-    # Hub split (README.md:417-418 pathology): sources above the out-degree
-    # cap are collected ONCE here — a bounded driver list (at most E/cap
-    # ids, e.g. ≤100 for cap=1M on 100M edges; same plan-constant class as
-    # the per-superstep stats action) — and their scatter rides a broadcast
-    # join every superstep (see scatter_gather).
-    hub_ids: list[int] = []
-    if hub_split_outdeg == "auto":
-        shuffle_parts = int(
-            edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-        hub_split_outdeg = max(
-            HUB_AUTO_FLOOR, g.n_edges // max(shuffle_parts, 1)
-        )
-    if hub_split_outdeg is not None:
-        hub_ids = [
-            r["src"]
-            for r in g.links.filter(F.col("outdeg") > hub_split_outdeg)
-            .select("src")
-            .distinct()
-            .collect()
-        ]
-    build_seconds = time.monotonic() - t_setup
-
-    history: list[IterationStats] = []
-    converged = False
-    iterations = 0
-
-    # Placed mode leans on SUBSET co-partitioning: the links cache is
-    # HashPartitioning([part]) and the scatter joins on (part, src) —
-    # valid co-location (equal (part, src) implies equal part) that
-    # Spark >= 3.3 rejects by default (requireAllClusterKeysForCoPartition,
-    # a skew-conservatism default aimed at low-cardinality prefixes; a
-    # graph partition is balance-guarded by construction). Scoped to the
-    # iteration loop and restored after, so no other query's planning
-    # changes.
-    spark = edges.sparkSession
-    _copart_key = "spark.sql.requireAllClusterKeysForCoPartition"
-    _copart_prev = spark.conf.get(_copart_key, "true")
-    if placed:
-        spark.conf.set(_copart_key, "false")
     try:
-        for i in range(max_iter):
-            t0 = time.monotonic()
-            # J1/C2 scatter + A1 gather: links is cached pre-partitioned by src,
-            # so only the V-row ranks side shuffles here; hub sources (if a
-            # cap was given) scatter via broadcast instead.
-            msgs = scatter_gather(g.links, ranks, hub_ids)
-            # C1 update with same-iteration dangling redistribution.
-            new = (
-                ranks.select(
-                    "id",
-                    "dangling",
-                    F.col("pr").alias("pr_old"),
-                    *(["part"] if placed else []),
-                )
-                .join(msgs, "id", "left")
-                .select(
-                    "id",
-                    "dangling",
-                    "pr_old",
-                    (
-                        F.lit(base)
-                        + F.lit(damping)
-                        * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(dangling_sum / n))
-                    ).alias("pr"),
-                    *(["part"] if placed else []),
-                )
+        n = g.n_vertices
+        if n == 0:
+            empty = spark.createDataFrame([], "id bigint, pr double")
+            return PageRankResult(empty, 0, 0, True, [])
+
+        # A PLACED build (g.parts set) carries the static `part` label so
+        # the scatter join can run on (part, src) against the
+        # part-distributed links cache — see scatter_gather.
+        placed = g.parts is not None
+        state = g.vertices.join(g.parts, "id") if placed else g.vertices
+        init_pr = F.lit(1.0 / n)
+        if initial_ranks is not None:
+            state = state.join(
+                initial_ranks.select("id", F.col("pr").alias("pr0")), "id", "left"
             )
-            # Lazy localCheckpoint truncates the logical plan immediately (the
-            # returned DF is LogicalRDD-backed) while deferring materialization
-            # to the stats aggregate below — ONE action per superstep. Under
-            # phase_timing the checkpoint is eager instead, splitting the wall
-            # time into a compute job and a stats job.
-            t_plan = time.monotonic()
-            new = new.localCheckpoint(eager=phase_timing)
-            t_compute = time.monotonic()
-
-            stats = new.agg(
-                F.sum(F.abs(F.col("pr") - F.col("pr_old"))).alias("diff"),
-                F.sum(F.when(F.col("dangling"), F.col("pr")).otherwise(0.0)).alias("dsum"),
-                F.sum("pr").alias("total"),
-            ).first()
-            t_stats = time.monotonic()
-
-            ranks.unpersist()
-            ranks = new.select(*state_cols)
-            dangling_sum = float(stats["dsum"] or 0.0)
-            avg_diff = float(stats["diff"] or 0.0) / n
-            iterations = i + 1
-            history.append(
-                IterationStats(
-                    iteration=iterations,
-                    avg_diff=avg_diff,
-                    dangling_sum=dangling_sum,
-                    total_pr=float(stats["total"] or 0.0),
-                    seconds=time.monotonic() - t0,
-                    # The lazy localCheckpoint call spans physical planning AND
-                    # AQE query-stage materialization (.rdd on an adaptive plan
-                    # executes intermediate shuffle stages synchronously), so on
-                    # large graphs it is mostly compute; it lands in compute
-                    # either way, with plan covering only DF construction.
-                    plan_seconds=t_plan - t0,
-                    compute_seconds=t_compute - t_plan,
-                    stats_seconds=t_stats - t_compute,
-                )
+            init_pr = F.coalesce(F.col("pr0"), init_pr)
+        ranks, dangling_sum = _init_ranks(
+            state, g.links, init_pr.alias("pr"), *(["part"] if placed else [])
+        )
+        # Hub split (README.md:417-418 pathology): sources above the
+        # out-degree cap are collected ONCE here — a bounded driver list (at
+        # most E/cap ids, e.g. ≤100 for cap=1M on 100M edges; same
+        # plan-constant class as the per-superstep stats action) — and their
+        # scatter rides a broadcast join every superstep (see scatter_gather).
+        hub_ids: list[int] = []
+        if hub_split_outdeg == "auto":
+            shuffle_parts = int(
+                spark.conf.get("spark.sql.shuffle.partitions", "200")
             )
-            if iterations >= min_iter and avg_diff <= tol:
-                converged = True
-                break
-            if checkpoint_dir is not None and iterations % checkpoint_every == 0:
-                # One extra V-row action per checkpoint_every supersteps; the
-                # ranks are already materialized by the stats aggregate, so
-                # this rescans the LogicalRDD, not the superstep lineage.
-                ranks.select("id", "pr").write.mode("overwrite").parquet(
-                    f"{checkpoint_dir}/iter_{iterations:05d}"
-                )
+            hub_split_outdeg = max(
+                HUB_AUTO_FLOOR, g.n_edges // max(shuffle_parts, 1)
+            )
+        if hub_split_outdeg is not None:
+            hub_ids = [
+                r["src"]
+                for r in g.links.filter(F.col("outdeg") > hub_split_outdeg)
+                .select("src")
+                .distinct()
+                .collect()
+            ]
+        build_seconds = time.monotonic() - t_setup
 
-    finally:
+        # Placed mode leans on SUBSET co-partitioning: the links cache is
+        # HashPartitioning([part]) and the scatter joins on (part, src) —
+        # valid co-location (equal (part, src) implies equal part) that
+        # Spark >= 3.3 rejects by default (requireAllClusterKeysForCoPartition,
+        # a skew-conservatism default aimed at low-cardinality prefixes; a
+        # graph partition is balance-guarded by construction). Scoped to the
+        # iteration loop and restored after, so no other query's planning
+        # changes.
+        copart_key = "spark.sql.requireAllClusterKeysForCoPartition"
+        copart_prev = spark.conf.get(copart_key, "true")
         if placed:
-            spark.conf.set(_copart_key, _copart_prev)
-
-    result = ranks.select("id", "pr")
-    if own_graph:
-        g.unpersist()
-    return PageRankResult(
-        result,
-        n,
-        iterations,
-        converged,
-        history,
-        build_seconds=build_seconds,
-        hub_ids=hub_ids,
-    )
+            spark.conf.set(copart_key, "false")
+        try:
+            result = _supersteps(
+                g.links, ranks, dangling_sum, _uniform_update(damping, n), n,
+                max_iter, tol, min_iter,
+                hub_ids=hub_ids,
+                phase_timing=phase_timing,
+                checkpoint_dir=checkpoint_dir,
+                checkpoint_every=checkpoint_every,
+            )
+        finally:
+            if placed:
+                spark.conf.set(copart_key, copart_prev)
+    finally:
+        if own_graph:
+            g.unpersist()
+    result.build_seconds = build_seconds
+    result.hub_ids = hub_ids
+    return result
 
 
 def personalized_pagerank(
@@ -439,99 +486,38 @@ def personalized_pagerank(
 
         pr = (1-d)*v + d*(Σ contrib + dangling_sum * v)
 
-    Init pr = v (the walk starts at the sources). Everything else — scatter,
-    gather, dedup, single stats action, lazy localCheckpoint per superstep —
-    is the uniform kernel's machinery; same scale shape (links shuffled
-    once, only V rows move per superstep). Sources absent from the graph
+    Init pr = v (the walk starts at the sources). The ranks carry v as a
+    static ``reset`` column and run the one superstep driver,
+    ``_supersteps``, with this update rule. Sources absent from the graph
     contribute no mass (their reset weight is simply never materialized),
     keeping results well-defined on any input.
     """
     own_graph = graph is None
     g = graph or build_graph(edges)
-    n = g.n_vertices
-    if n == 0 or not sources:
-        empty = edges.sparkSession.createDataFrame([], "id bigint, pr double")
-        return PageRankResult(empty, n, 0, True, [])
-    w = 1.0 / len(sources)
-    src_ids = [int(s) for s in sources]
+    try:
+        n = g.n_vertices
+        if n == 0 or not sources:
+            empty = edges.sparkSession.createDataFrame([], "id bigint, pr double")
+            return PageRankResult(empty, n, 0, True, [])
+        src_ids = [int(s) for s in sources]
+        reset = F.when(
+            F.col("id").isin(src_ids), F.lit(1.0 / len(sources))
+        ).otherwise(F.lit(0.0))
+        ranks, dangling_sum = _init_ranks(
+            g.vertices, g.links, reset.alias("reset"), reset.alias("pr")
+        )
 
-    out_src = g.links.select("src").distinct()
-    reset = F.when(F.col("id").isin(src_ids), F.lit(w)).otherwise(F.lit(0.0))
-    ranks = (
-        g.vertices.join(out_src, g.vertices.id == out_src.src, "left")
-        .select(
-            "id",
-            reset.alias("reset"),
-            reset.alias("pr"),
-            F.col("src").isNull().alias("dangling"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    first = ranks.agg(
-        F.sum(F.when(F.col("dangling"), F.col("pr")).otherwise(0.0)).alias("dsum")
-    ).first()
-    dangling_sum = float(first["dsum"] or 0.0)
+        def update(contrib: Column, dsum: float) -> Column:
+            return F.lit(1.0 - damping) * F.col("reset") + F.lit(damping) * (
+                contrib + F.lit(dsum) * F.col("reset")
+            )
 
-    history: list[IterationStats] = []
-    converged = False
-    iterations = 0
-    for i in range(max_iter):
-        t0 = time.monotonic()
-        msgs = (
-            g.links.join(ranks.select(F.col("id").alias("src"), "pr"), "src")
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("pr") / F.col("outdeg")).alias("contrib"),
-            )
-            .groupBy("id")
-            .agg(F.sum("contrib").alias("contrib"))
+        return _supersteps(
+            g.links, ranks, dangling_sum, update, n, max_iter, tol, min_iter
         )
-        new = (
-            ranks.select("id", "reset", "dangling", F.col("pr").alias("pr_old"))
-            .join(msgs, "id", "left")
-            .select(
-                "id",
-                "reset",
-                "dangling",
-                "pr_old",
-                (
-                    F.lit(1.0 - damping) * F.col("reset")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.lit(dangling_sum) * F.col("reset")
-                    )
-                ).alias("pr"),
-            )
-        )
-        new = new.localCheckpoint(eager=False)
-        stats = new.agg(
-            F.sum(F.abs(F.col("pr") - F.col("pr_old"))).alias("diff"),
-            F.sum(F.when(F.col("dangling"), F.col("pr")).otherwise(0.0)).alias("dsum"),
-            F.sum("pr").alias("total"),
-        ).first()
-        ranks.unpersist()
-        ranks = new.select("id", "reset", "pr", "dangling")
-        dangling_sum = float(stats["dsum"] or 0.0)
-        avg_diff = float(stats["diff"] or 0.0) / n
-        iterations = i + 1
-        history.append(
-            IterationStats(
-                iteration=iterations,
-                avg_diff=avg_diff,
-                dangling_sum=dangling_sum,
-                total_pr=float(stats["total"] or 0.0),
-                seconds=time.monotonic() - t0,
-            )
-        )
-        if iterations >= min_iter and avg_diff <= tol:
-            converged = True
-            break
-
-    result = ranks.select("id", "pr")
-    if own_graph:
-        g.unpersist()
-    return PageRankResult(result, n, iterations, converged, history)
+    finally:
+        if own_graph:
+            g.unpersist()
 
 
 def personalized_pagerank_multi(
@@ -560,6 +546,7 @@ def personalized_pagerank_multi(
     oracle discipline; convergence looping belongs to the single-vector
     kernels)."""
     spark = edges.sparkSession
+    own_graph = graph is None
     g = graph or build_graph(edges)
     state = spark.createDataFrame(
         [(int(s), int(s), 1.0) for s in seeds], "s bigint, id bigint, pr double"
@@ -602,6 +589,9 @@ def personalized_pagerank_multi(
             )
             .localCheckpoint(eager=True)
         )
+    # state is eagerly checkpointed, so it outlives the graph's cache
+    if own_graph:
+        g.unpersist()
     return state
 
 
@@ -632,12 +622,11 @@ def pagerank_weighted(
 
     Contract: ``edges(src, dst, w)`` carries ONE row per (src, dst) with a
     positive weight (e.g. raw-edge multiplicity from the A2 dedup — the
-    information the unweighted kernel throws away). Execution shape is the
-    audited superstep skeleton: the weighted edge table shuffles once at
-    build (carrying w and its per-src sum), stays cached sorted by src,
-    and only V-row rank tables move per superstep; one driver action per
-    superstep returns (Σ|Δ|, dangling mass, Σpr); lazy localCheckpoint
-    truncates lineage."""
+    information the unweighted kernel throws away). The weighted edge
+    table shuffles once at build (carrying w and its per-src sum) and
+    stays cached sorted by src; the supersteps are the one driver,
+    ``_supersteps``, with the uniform update rule and a pr*w/wsum edge
+    share."""
     w = F.col(weight_col)
     wedges = edges.select("src", "dst", w.cast("double").alias("w"))
     # ONE E-row shuffle for the build: the E rows move once
@@ -655,87 +644,23 @@ def pagerank_weighted(
         .join(wdeg.hint("merge"), "src")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    verts = (
-        wedges.select(F.col("src").alias("id"))
-        .union(wedges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    n = verts.count()
-    if n == 0:
-        empty = edges.sparkSession.createDataFrame([], "id bigint, pr double")
-        return PageRankResult(empty, 0, 0, True, [])
-    base = (1.0 - damping) / n
-
-    out_src = links.select("src").distinct()
-    ranks = (
-        verts.join(out_src, verts.id == out_src.src, "left")
-        .select(
-            "id",
-            F.lit(1.0 / n).alias("pr"),
-            F.col("src").isNull().alias("dangling"),
+    try:
+        verts = (
+            wedges.select(F.col("src").alias("id"))
+            .union(wedges.select(F.col("dst").alias("id")))
+            .distinct()
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    first = ranks.agg(
-        F.sum(F.when(F.col("dangling"), F.col("pr")).otherwise(0.0)).alias("dsum")
-    ).first()
-    dangling_sum = float(first["dsum"] or 0.0)
-
-    history: list[IterationStats] = []
-    converged = False
-    iterations = 0
-    for i in range(max_iter):
-        t0 = time.monotonic()
-        msgs = (
-            links.join(ranks.select(F.col("id").alias("src"), "pr"), "src")
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("pr") * F.col("w") / F.col("wsum")).alias("contrib"),
-            )
-            .groupBy("id")
-            .agg(F.sum("contrib").alias("contrib"))
+        n = verts.count()
+        if n == 0:
+            empty = edges.sparkSession.createDataFrame([], "id bigint, pr double")
+            return PageRankResult(empty, 0, 0, True, [])
+        ranks, dangling_sum = _init_ranks(
+            verts, links, F.lit(1.0 / n).alias("pr")
         )
-        new = (
-            ranks.select("id", "dangling", F.col("pr").alias("pr_old"))
-            .join(msgs, "id", "left")
-            .select(
-                "id",
-                "dangling",
-                "pr_old",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.lit(dangling_sum / n)
-                    )
-                ).alias("pr"),
-            )
+        return _supersteps(
+            links, ranks, dangling_sum, _uniform_update(damping, n), n,
+            max_iter, tol, min_iter,
+            share=F.col("pr") * F.col("w") / F.col("wsum"),
         )
-        new = new.localCheckpoint(eager=False)
-        stats = new.agg(
-            F.sum(F.abs(F.col("pr") - F.col("pr_old"))).alias("diff"),
-            F.sum(F.when(F.col("dangling"), F.col("pr")).otherwise(0.0)).alias("dsum"),
-            F.sum("pr").alias("total"),
-        ).first()
-        ranks.unpersist()
-        ranks = new.select("id", "pr", "dangling")
-        dangling_sum = float(stats["dsum"] or 0.0)
-        avg_diff = float(stats["diff"] or 0.0) / n
-        iterations = i + 1
-        history.append(
-            IterationStats(
-                iteration=iterations,
-                avg_diff=avg_diff,
-                dangling_sum=dangling_sum,
-                total_pr=float(stats["total"] or 0.0),
-                seconds=time.monotonic() - t0,
-            )
-        )
-        if iterations >= min_iter and avg_diff <= tol:
-            converged = True
-            break
-
-    result = ranks.select("id", "pr")
-    links.unpersist()
-    return PageRankResult(result, n, iterations, converged, history)
+    finally:
+        links.unpersist()

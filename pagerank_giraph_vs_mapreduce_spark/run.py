@@ -21,6 +21,8 @@ from __future__ import annotations
 import os
 import sys
 
+from pyspark.errors import AnalysisException
+
 from pagerank_giraph_vs_mapreduce_spark.graph.pagerank import pagerank
 from pagerank_giraph_vs_mapreduce_spark.session import get_spark
 from pagerank_giraph_vs_mapreduce_spark.sources.edgelist import read_edgelist
@@ -31,28 +33,42 @@ from pagerank_giraph_vs_mapreduce_spark.sources.sinks import (
     write_top_k,
 )
 
+# (name, type, default) of the optional positional arguments
+_OPTIONS = (
+    ("maxIter", int, 10),
+    ("damping", float, 0.85),
+    ("threshold", float, 1e-6),
+    ("minIter", int, 5),
+    ("minWorkers", int, 1),
+    ("maxWorkers", int, None),
+)
+
 
 def main(argv: list[str]) -> int:
     if len(argv) < 2:
         print(__doc__)
         return 2
     inp, out = argv[0], argv[1]
-    max_iter = int(argv[2]) if len(argv) > 2 else 10
-    damping = float(argv[3]) if len(argv) > 3 else 0.85
-    threshold = float(argv[4]) if len(argv) > 4 else 1e-6
-    min_iter = int(argv[5]) if len(argv) > 5 else 5
-    min_workers = int(argv[6]) if len(argv) > 6 else 1
-    max_workers = int(argv[7]) if len(argv) > 7 else min_workers
-    if max_workers < min_workers:  # GI/PageRankDriver.java:60-61
+    opts = [default for _, _, default in _OPTIONS]
+    for i, ((name, conv, _), raw) in enumerate(zip(_OPTIONS, argv[2:])):
+        try:
+            opts[i] = conv(raw)
+        except ValueError:
+            print(f"error: {name} must be {conv.__name__}, got {raw!r}")
+            return 2
+    max_iter, damping, threshold, min_iter, min_workers, max_workers = opts
+    # maxWorkers defaults to minWorkers and is raised to it when lower
+    # (GI/PageRankDriver.java:60-61)
+    if max_workers is None or max_workers < min_workers:
         max_workers = min_workers
 
     spark = get_spark(
         shuffle_partitions=max_workers if len(argv) > 6 else None
     )
     try:
+        # spark.read.text checks the path when the DataFrame is created.
         edges = read_edgelist(spark, inp)
-        edges.first()  # force path validation before the run starts
-    except Exception as exc:  # noqa: BLE001
+    except AnalysisException as exc:
         if "PATH_NOT_FOUND" in str(exc):
             print(f"error: input path not found: {inp}")
             return 1

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import glob
 
+import pytest
 from pyspark.sql import Observation
 
 from pagerank_giraph_vs_mapreduce_spark.run import main as cli_main
@@ -94,3 +95,24 @@ def test_cli_end_to_end(spark, tmp_path):
     assert "PageRank Performance Report" in report
     assert "setup (graph build):" in report
     assert "Iteration  Total_ms" in report
+
+
+def test_cli_missing_input_is_a_clean_error(spark, tmp_path, capsys):
+    missing = str(tmp_path / "absent.txt")
+    assert cli_main([missing, str(tmp_path / "out")]) == 1
+    assert capsys.readouterr().out.strip() == (
+        f"error: input path not found: {missing}"
+    )
+
+
+@pytest.mark.parametrize(
+    "pos,bad", [(2, "ten"), (3, "0.85x"), (4, "tiny"), (5, "5.5"), (6, "w"), (7, "")]
+)
+def test_cli_rejects_non_numeric_args(tmp_path, capsys, pos, bad):
+    """A malformed maxIter/damping/threshold/minIter/worker argument is a
+    one-line error and exit code 2, not a traceback."""
+    argv = [write_snap(tmp_path), str(tmp_path / "out"), "30", "0.85", "1e-10", "5", "1", "2"]
+    argv[pos] = bad
+    assert cli_main(argv) == 2
+    lines = capsys.readouterr().out.strip().splitlines()
+    assert len(lines) == 1 and lines[0].startswith("error: "), lines

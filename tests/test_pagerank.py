@@ -149,3 +149,67 @@ def test_weighted_pagerank_weights_shift_mass(spark):
     }
     assert got[2] > got[3]
     assert abs(sum(got.values()) - 1.0) < 1e-9
+
+
+def _cached_entries(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+def test_pagerank_family_releases_its_caches(spark):
+    """Every PageRank-family call leaves Spark's cache manager holding as
+    many entries as before it ran — max_iter=0 included, where the
+    result is the initial ranks. getPersistentRDDs() would not do here:
+    it also counts localCheckpoint RDDs, which the ContextCleaner frees
+    on the JVM's GC timing."""
+    from pyspark.sql import functions as F
+
+    from pagerank_giraph_vs_mapreduce_spark.graph.hits import hits
+    from pagerank_giraph_vs_mapreduce_spark.graph.pagerank import (
+        pagerank_weighted,
+        personalized_pagerank,
+        personalized_pagerank_multi,
+    )
+
+    edges = make_edges(spark, [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1), (2, 5)])
+    wedges = edges.select("src", "dst", F.lit(2.0).alias("w"))
+    calls = {
+        "pagerank": lambda: pagerank(edges, max_iter=2).ranks,
+        "pagerank max_iter=0": lambda: pagerank(edges, max_iter=0).ranks,
+        "personalized_pagerank": lambda: personalized_pagerank(
+            edges, sources=[1], max_iter=2
+        ).ranks,
+        "personalized_pagerank_multi": lambda: personalized_pagerank_multi(
+            edges, seeds=[1, 2], k=2
+        ),
+        "pagerank_weighted": lambda: pagerank_weighted(wedges, max_iter=2).ranks,
+        "hits": lambda: hits(edges),
+    }
+    for name, call in calls.items():
+        before = _cached_entries(spark)
+        out = call()
+        assert _cached_entries(spark) == before, name
+        assert out.count() > 0, name  # the result outlives the caches
+
+
+def test_ppr_from_every_vertex_equals_pagerank(spark):
+    """With every vertex a source, PPR's reset vector is the uniform 1/N,
+    so its update rule reduces to the uniform kernel's: after a fixed 6
+    supersteps the two agree to rounding, dangling (dst-only) vertices
+    included."""
+    from pagerank_giraph_vs_mapreduce_spark.graph.pagerank import (
+        personalized_pagerank,
+    )
+
+    rng = random.Random(11)
+    pairs = [(rng.randrange(60), rng.randrange(80)) for _ in range(240)]
+    pairs = [(a, b) for a, b in pairs if a != b]
+    verts = {v for p in pairs for v in p}
+    assert verts - {a for a, _ in pairs}  # dst-only vertices exist
+    edges = make_edges(spark, pairs)
+    fixed = dict(max_iter=6, tol=-1.0, min_iter=0)
+    uniform = pagerank(edges, **fixed)
+    ppr = personalized_pagerank(edges, sources=sorted(verts), **fixed)
+    assert uniform.iterations == ppr.iterations == 6
+    a, b = ranks_dict(uniform), ranks_dict(ppr)
+    assert a.keys() == b.keys() == verts
+    assert max(abs(a[k] - b[k]) for k in a) <= 1e-12
