@@ -36,15 +36,6 @@ MINHASH_B = (
 )
 
 
-def shingle_code_col(sh: Column, length: int) -> Column:
-    """Polynomial code of a length-`length` shingle (Spark side)."""
-    code = F.lit(0).cast("long")
-    for i in range(1, length + 1):
-        weight = MULT ** (length - i)
-        code = code + F.ascii(F.substring(sh, i, 1)).cast("long") * F.lit(weight)
-    return code % F.lit(CODE_MOD)
-
-
 def shingle_code_sql(sh_expr: str, length: int) -> str:
     """Same polynomial code as ANSI SQL text (oracle side)."""
     # explicit BIGINT casts: DuckDB would otherwise multiply in INT32

@@ -22,12 +22,13 @@ and REVERTED for this flagship build: with no partial aggregation before
 the shuffle, the dedup becomes one full-partition hash aggregate per task
 (E/P-row hash tables live concurrently), and the measured ladder showed
 build 28-33 s → 58-212 s and the supersteps AFTER the build 3.95 → 7.03
-s/iter median in the same JVM at S3 scale (OPTIMIZATION_r13.md change #1
-adjudication). We keep ``links(src, dst, outdeg)`` as flat rows rather
-than the reference's ``collect_list`` adjacency encoding (R2): flat rows
-shuffle-join without exploding arrays, stay columnar, and let AQE split
-skewed hub vertices, which is exactly the hot-key pathology the reference
-documents (README.md:417-418).
+s/iter median in the same JVM at S3 scale. We keep ``links(src, dst,
+outdeg)`` as flat rows rather than the reference's ``collect_list``
+adjacency encoding (R2): flat rows shuffle-join without exploding
+arrays and stay columnar. The hub-vertex hot-key pathology the reference
+documents (README.md:417-418) is handled by the hub split in
+``graph/pagerank.py:scatter_gather``: AQE's skew join never fires
+through the cached links.
 """
 
 from __future__ import annotations
@@ -73,7 +74,7 @@ def dedup_src_sorted(edge_rows: DataFrame, agg: list | None = None) -> DataFrame
     the grouping keys satisfies the aggregate). The previous build
     (distinct()/groupBy first, repartition("src") after) paid TWO E-row
     shuffles for the same table; this pays one (optimization guide §2.4
-    "remove shuffles outright"; before/after plans in plans/r13/).
+    "remove shuffles outright").
 
     ``agg``: aggregate expressions for merging parallel edges (e.g.
     ``[F.min("w").alias("w")]``). Callers project to exactly the columns

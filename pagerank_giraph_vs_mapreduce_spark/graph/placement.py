@@ -13,8 +13,8 @@ destination) pair. Under random/hash placement a destination with
 in-degree d receives from ~min(d, P) partitions; under a low-cut
 placement its in-neighbors are co-located, so it receives from ~1.
 The gather exchange therefore shrinks from ~P rows per hot vertex to
-~1+cut-degree — measured by tools/placement_ab.py and pinned (placed
-<= hash, results exactly equal) by tests/test_placement.py.
+~1+cut-degree — measured by ``exchange_metrics`` below and pinned
+(placed <= hash, results exactly equal) by tests/test_placement.py.
 
 At cluster scale the same placed table would be written
 bucket-partitioned (sinks.py's bucketed-join path) so every superstep
@@ -161,9 +161,9 @@ def wcc_gather_round(placed: DataFrame) -> DataFrame:
 
 def exchange_metrics(df: DataFrame) -> dict:
     """Execute ``df`` and read its exchanges' actual shuffle
-    bytes/records from the executed plan's SQLMetrics (the
-    tools/runtime_metrics.py walk, packaged for the placement A/B):
-    returns rows_out / exchanges / shuffle_records / shuffle_bytes."""
+    bytes/records from the executed plan's SQLMetrics (a walk of the
+    executed plan, packaged for the placement A/B): returns rows_out /
+    exchanges / shuffle_records / shuffle_bytes."""
     n_rows = len(df.collect())
     jvm = df.sparkSession._jvm
 

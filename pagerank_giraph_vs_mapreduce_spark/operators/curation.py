@@ -90,9 +90,9 @@ def _curation_stages(
     # bucket member vs the bucket-min representative, B-1 edges/bucket)
     # — drop every member >= the Jaccard threshold against its
     # representative. All-pairs-per-bucket is quadratic in cluster size
-    # (525x shuffle records for 10x docs on the sf1 replica corpus —
-    # RUNTIME.md sf1 spot-run); anchor dedup is the shape that survives
-    # a boilerplate-heavy 100 TB corpus.
+    # (525x shuffle records for 10x docs on the sf1 replica corpus);
+    # anchor dedup is the shape that survives a boilerplate-heavy 100 TB
+    # corpus.
     pairs = minhash_near_dups(
         exact.select(id_col, text_col),
         id_col,

@@ -429,7 +429,7 @@ def minhash_near_dups(
     bucket, which is the difference between quadratic and linear when the
     corpus contains large near-duplicate clusters — the sf1 spot-run
     measured the all-pairs form at 525x shuffle records for 10x docs on a
-    replica-heavy corpus, vs ~13x for the star form (RUNTIME.md). The
+    replica-heavy corpus, vs ~13x for the star form. The
     trade: only member↔representative similarity is verified, so a pair
     of cluster members neither of which is the bucket min is not emitted
     — the right contract for DEDUP-style "keep one representative"

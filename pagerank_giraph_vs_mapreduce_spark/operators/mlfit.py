@@ -76,7 +76,9 @@ def logreg_gd(
     Plan shape: ``iters`` scans of the (cached) feature projection, each
     ending in one global aggregate whose 1-row output crossJoins the
     next scan — weights never touch the driver. At 100 TB each step is
-    a map-side-combined sum of |w|+1 doubles per partition."""
+    a map-side-combined sum of |w|+1 doubles per partition. The 1-row
+    result is materialized before the call returns, so the cached
+    projection is released on every exit path."""
     from pyspark.storagelevel import StorageLevel
 
     names = ["bias"] + list(feature_cols)
@@ -102,78 +104,83 @@ def logreg_gd(
         # per-row DECIMAL — exact and order-independent.
         proj = proj.sortWithinPartitions("_bkt")
     feats = proj.persist(StorageLevel.MEMORY_AND_DISK)
-    # One action up front (materializes the cache); training itself is
-    # lazy — every GD step re-reads the narrow cached projection instead
-    # of rescanning the source.
-    if batch_col is None:
-        n_of = {0: feats.count()}
-    else:
-        # one B-row action; also materializes the cache like count() does
-        n_of = {
-            int(r["_bkt"]): r["cnt"]
-            for r in feats.groupBy("_bkt").agg(F.count(F.lit(1)).alias("cnt")).collect()
-        }
-    w = feats.sparkSession.createDataFrame(
-        [tuple(0.0 for _ in names)], ", ".join(f"w_{c} double" for c in names)
-    )
-    for t in range(iters):
-        bkt = 0 if batch_col is None else t % n_batches
-        batch = (
-            feats if batch_col is None else feats.filter(F.col("_bkt") == bkt)
+    try:
+        # One action up front (materializes the cache); the GD steps stay
+        # one lazy plan — every step re-reads the narrow cached projection
+        # instead of rescanning the source — until the eager checkpoint of
+        # the 1-row result, after which the cache is released.
+        if batch_col is None:
+            n_of = {0: feats.count()}
+        else:
+            # one B-row action; also materializes the cache like count() does
+            n_of = {
+                int(r["_bkt"]): r["cnt"]
+                for r in feats.groupBy("_bkt").agg(F.count(F.lit(1)).alias("cnt")).collect()
+            }
+        w = feats.sparkSession.createDataFrame(
+            [tuple(0.0 for _ in names)], ", ".join(f"w_{c} double" for c in names)
         )
-        n_t = n_of.get(bkt, 0)
-        if n_t == 0:
-            continue  # empty bucket: gradient is zero, weights unchanged
+        for t in range(iters):
+            bkt = 0 if batch_col is None else t % n_batches
+            batch = (
+                feats if batch_col is None else feats.filter(F.col("_bkt") == bkt)
+            )
+            n_t = n_of.get(bkt, 0)
+            if n_t == 0:
+                continue  # empty bucket: gradient is zero, weights unchanged
+            z = sum(
+                (F.col(f"w_{c}") * F.col(c) for c in names[1:]),
+                F.col("w_bias") * F.col("bias"),
+            )
+            resid = F.col("_y") - squash(z)
+            grads = batch.crossJoin(F.broadcast(w)).agg(
+                *[
+                    F.sum(
+                        F.round(F.col(c) * resid, 12).cast("decimal(38,12)")
+                    ).alias(f"g_{c}")
+                    for c in names
+                ]
+            )
+            # (g * lr) / n, left-associated — the oracle mirrors the same two
+            # IEEE ops in the same order (a precomputed lr/n quotient would
+            # round differently).
+            def upd(c: str):
+                base = F.col(f"w_{c}") + F.col(f"d_{c}")
+                if l2:
+                    base = base - F.round(F.lit(lr * l2) * F.col(f"w_{c}"), 12)
+                return F.round(base, 12).alias(f"w_{c}")
+
+            w = grads.select(
+                *[
+                    F.round(
+                        F.col(f"g_{c}").cast("double") * F.lit(lr) / F.lit(float(n_t)),
+                        12,
+                    ).alias(f"d_{c}")
+                    for c in names
+                ]
+            ).crossJoin(F.broadcast(w)).select(*[upd(c) for c in names])
         z = sum(
             (F.col(f"w_{c}") * F.col(c) for c in names[1:]),
             F.col("w_bias") * F.col("bias"),
         )
-        resid = F.col("_y") - squash(z)
-        grads = batch.crossJoin(F.broadcast(w)).agg(
-            *[
-                F.sum(
-                    F.round(F.col(c) * resid, 12).cast("decimal(38,12)")
-                ).alias(f"g_{c}")
-                for c in names
-            ]
+        return (
+            feats.crossJoin(F.broadcast(w))
+            .agg(
+                *[F.first(f"w_{c}").alias(f"w_{c}") for c in names],
+                F.avg(
+                    F.when(
+                        (squash(z) >= 0.5) == (F.col("_y") >= 0.5), 1.0
+                    ).otherwise(0.0)
+                ).alias("raw_acc"),
+            )
+            .select(
+                *[F.col(f"w_{c}") for c in names],
+                F.round("raw_acc", 9).alias("accuracy"),
+            )
+            .localCheckpoint(eager=True)
         )
-        # (g * lr) / n, left-associated — the oracle mirrors the same two
-        # IEEE ops in the same order (a precomputed lr/n quotient would
-        # round differently).
-        def upd(c: str):
-            base = F.col(f"w_{c}") + F.col(f"d_{c}")
-            if l2:
-                base = base - F.round(F.lit(lr * l2) * F.col(f"w_{c}"), 12)
-            return F.round(base, 12).alias(f"w_{c}")
-
-        w = grads.select(
-            *[
-                F.round(
-                    F.col(f"g_{c}").cast("double") * F.lit(lr) / F.lit(float(n_t)),
-                    12,
-                ).alias(f"d_{c}")
-                for c in names
-            ]
-        ).crossJoin(F.broadcast(w)).select(*[upd(c) for c in names])
-    z = sum(
-        (F.col(f"w_{c}") * F.col(c) for c in names[1:]),
-        F.col("w_bias") * F.col("bias"),
-    )
-    return (
-        feats.crossJoin(F.broadcast(w))
-        .agg(
-            *[F.first(f"w_{c}").alias(f"w_{c}") for c in names],
-            F.avg(
-                F.when(
-                    (squash(z) >= 0.5) == (F.col("_y") >= 0.5), 1.0
-                ).otherwise(0.0)
-            ).alias("raw_acc"),
-        )
-        .select(
-            *[F.col(f"w_{c}") for c in names],
-            F.round("raw_acc", 9).alias("accuracy"),
-        )
-    )
+    finally:
+        feats.unpersist()
 
 
 def logreg_gd_grouped(

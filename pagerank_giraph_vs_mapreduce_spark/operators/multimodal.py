@@ -513,8 +513,8 @@ def png_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
             )
 
     # explicit projection: mapInPandas consumes whole input rows, so
-    # without it the parquet scan reads every column of `docs` (measured
-    # in PLANS.md — 5-column ReadSchema for a 2-column need)
+    # without it the parquet scan reads every column of `docs` (a
+    # 5-column ReadSchema for a 2-column need)
     return docs.select("doc_id", text_col).mapInPandas(batches, schema)
 
 

@@ -421,8 +421,7 @@ def bpe_learn_scaled(
     3. **One driver round per merge, vocabulary-sized**: each round
        collects exactly ONE (pair, count) row — the classic BSP shape
        (same class as PageRank's per-superstep stats action). 32k merges
-       = 32k vocab-table aggregations; sec/merge is recorded by bench.py
-       so the cost curve is measured, not assumed.
+       = 32k vocab-table aggregations.
 
     Returns the merge table (merge_round, pair, n_occ), stopping early
     if the vocabulary merges to single symbols before ``merges`` rounds.
@@ -731,9 +730,6 @@ def char_entropy(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             F.log2(F.col("_n")) - ssum.cast("double") / F.col("_n"), 6
         ).alias("entropy_bits"),
     )
-
-
-SPAN_SENTINEL = "<extra_id_{n}>"
 
 
 def span_corrupt(

@@ -603,12 +603,11 @@ KTRUSS_ROUNDS = 3
 # graph. The shared derived graph at sf0.1 is uniformly dense (median
 # degree ~700, 43M triangles/round), 2-3 orders of magnitude more
 # triangles per edge than a real web/social graph at the same |E| — a
-# suite entry on it measures the fixture, not the peeling plan (VERDICT
-# r08 item 3; the dense variant survives as bench.py's named
-# ktruss_dense_probe). mod(4001,6000) at sf0.1: ~576k edges / ~10k
-# vertices / 1.85M round-1 triangles — triangle-per-edge ratio ~3.2,
-# the soc-LiveJournal1 ballpark (69M E / 286M tri ~ 4.1) — and the
-# sf0.01 gate keeps a nonempty 84-edge 4-truss. The convergence query
+# suite entry on it measures the fixture, not the peeling plan.
+# mod(4001,6000) at sf0.1: ~576k edges / ~10k vertices / 1.85M round-1
+# triangles — triangle-per-edge ratio ~3.2, the soc-LiveJournal1
+# ballpark (69M E / 286M tri ~ 4.1) — and the sf0.01 gate keeps a
+# nonempty 84-edge 4-truss. The convergence query
 # uses mod(3001,4500), the fixture where the fixed 3-round peel provably
 # UNDER-peels at sf0.01 (round 4 still removes 61 edges: 300 -> 239).
 TRUSS_SRC_MOD = 4001
@@ -683,8 +682,7 @@ def g_ktruss4_r3(spark: SparkSession, sf_dir: str) -> DataFrame:
     work, eager localCheckpoint per round on the shrinking edge set).
     Runs on the sparse truss fixture (see TRUSS_SRC_MOD note): a
     realistic triangle-per-edge ratio, so the suite entry measures the
-    peeling plan, not a 43M-triangle stress — that lives on as bench.py's
-    ktruss_dense_probe."""
+    peeling plan, not a 43M-triangle stress."""
     edges = _truss_edges(spark, sf_dir, TRUSS_SRC_MOD, TRUSS_DST_MOD)
     return ktruss_edges(edges, k=KTRUSS_K, rounds=KTRUSS_ROUNDS)
 

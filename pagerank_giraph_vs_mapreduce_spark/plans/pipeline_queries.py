@@ -16,7 +16,7 @@ exercise both dedup stages —
 DUP_OFFSET is 1e9, not a table-sized constant: a fixed +10000 silently
 collides with real doc_ids once the documents table exceeds 10000 rows
 (sf >= ~1) and the planted "duplicates" become id-aliased real docs —
-the same trap bench.py's semantic_k64 entry documents for vec_ids.
+the same trap applies to vec_ids.
 """
 
 from __future__ import annotations

@@ -64,8 +64,7 @@ def sim_cosine_top10_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/similarity.py:cosine_topk_vectorized, VERDICT_r04 item 6):
     same oracle, same 6-dp contract — certifying that the vectorized
     kernel is drop-in value-identical to the higher-order-function form.
-    bench.py's kernel_cosine_* entries record which one wins per scale
-    (SCALING.md §10)."""
+    Which one wins depends on scale (SCALING.md §10)."""
     from pagerank_giraph_vs_mapreduce_spark.operators.similarity import (
         cosine_topk_vectorized,
     )

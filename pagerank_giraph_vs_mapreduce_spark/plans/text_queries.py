@@ -615,10 +615,9 @@ def text_bpe_merges_k64(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-sampled training corpus. Unlike the lazy 3-round chain, each
     round materializes the vocabulary with an eager localCheckpoint
     (plan depth O(1), not O(merges)) and collects exactly one
-    vocabulary-sized top-pair row — the real vocab-training cost curve,
-    measured per-merge by bench.py. The oracle replays all 64 rounds
-    with the same unrolled gaps-and-islands SQL as the k=3 twin, gated
-    by the same md5 sample."""
+    vocabulary-sized top-pair row — the real vocab-training cost curve.
+    The oracle replays all 64 rounds with the same unrolled
+    gaps-and-islands SQL as the k=3 twin, gated by the same md5 sample."""
     from pagerank_giraph_vs_mapreduce_spark.operators.text import (
         bpe_learn_scaled,
     )

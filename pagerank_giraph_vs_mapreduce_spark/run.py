@@ -13,7 +13,8 @@ minWorkers/maxWorkers are the Giraph driver's worker-count bounds
 (clamped the same way: maxWorkers < minWorkers is raised to minWorkers).
 Under Spark there is no per-job worker count; the honest analog is
 partition parallelism, so maxWorkers (when given) sets the session's
-shuffle-partition count. Omitted, parallelism follows $SPARK_GRAFT_CPUS.
+shuffle-partition count. Omitted, parallelism follows $SPARK_GRAFT_CPUS,
+or every core the process may run on when that is unset.
 """
 
 from __future__ import annotations

@@ -155,23 +155,42 @@ def _cached_entries(spark) -> int:
     return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
 
 
-def test_pagerank_family_releases_its_caches(spark):
-    """Every PageRank-family call leaves Spark's cache manager holding as
-    many entries as before it ran — max_iter=0 included, where the
-    result is the initial ranks. getPersistentRDDs() would not do here:
+def test_operators_release_their_caches(spark):
+    """Every PageRank-family, graph-kernel and GD-trainer call leaves
+    Spark's cache manager holding as many entries as before it ran —
+    PageRank's max_iter=0 included, where the result is the initial
+    ranks. getPersistentRDDs() would not do here:
     it also counts localCheckpoint RDDs, which the ContextCleaner frees
     on the JVM's GC timing."""
     from pyspark.sql import functions as F
 
+    from pagerank_giraph_vs_mapreduce_spark.graph.communities import (
+        label_propagation,
+        louvain_one_level,
+    )
+    from pagerank_giraph_vs_mapreduce_spark.graph.components import (
+        connected_components,
+    )
     from pagerank_giraph_vs_mapreduce_spark.graph.hits import hits
+    from pagerank_giraph_vs_mapreduce_spark.graph.motifs import kcore_survivors
     from pagerank_giraph_vs_mapreduce_spark.graph.pagerank import (
         pagerank_weighted,
         personalized_pagerank,
         personalized_pagerank_multi,
     )
+    from pagerank_giraph_vs_mapreduce_spark.graph.paths import (
+        bfs_distances,
+        multi_bfs,
+        sssp_distances,
+    )
+    from pagerank_giraph_vs_mapreduce_spark.operators.mlfit import logreg_gd
 
     edges = make_edges(spark, [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1), (2, 5)])
     wedges = edges.select("src", "dst", F.lit(2.0).alias("w"))
+    train = spark.createDataFrame(
+        [(0.1, 0.9, 1.0), (0.8, 0.2, 0.0), (0.3, 0.7, 1.0), (0.9, 0.1, 0.0)],
+        "f1 double, f2 double, y double",
+    )
     calls = {
         "pagerank": lambda: pagerank(edges, max_iter=2).ranks,
         "pagerank max_iter=0": lambda: pagerank(edges, max_iter=0).ranks,
@@ -183,6 +202,14 @@ def test_pagerank_family_releases_its_caches(spark):
         ),
         "pagerank_weighted": lambda: pagerank_weighted(wedges, max_iter=2).ranks,
         "hits": lambda: hits(edges),
+        "connected_components": lambda: connected_components(edges).components,
+        "label_propagation": lambda: label_propagation(edges),
+        "louvain_one_level": lambda: louvain_one_level(edges),
+        "bfs_distances": lambda: bfs_distances(edges, source=1).distances,
+        "multi_bfs": lambda: multi_bfs(edges, sources=[1, 4]).distances,
+        "sssp_distances": lambda: sssp_distances(wedges, source=1).distances,
+        "kcore_survivors": lambda: kcore_survivors(edges, k=2),
+        "logreg_gd": lambda: logreg_gd(train, ["f1", "f2"], "y"),
     }
     for name, call in calls.items():
         before = _cached_entries(spark)

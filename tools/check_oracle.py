@@ -4,7 +4,7 @@ tables, compare row count + schema + order-insensitive values.
 
 Stricter than the driver (exact stringified-value comparison after sorting
 columns by name and rows lexicographically), so passing here should imply
-passing CORRECTNESS_r{N}.json.
+passing the driver's row-count + schema + value-hash check.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -13,10 +13,13 @@ from __future__ import annotations
 
 import math
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# Import the package from the checkout this script lives in, not from
+# wherever the interpreter was started.
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pagerank_giraph_vs_mapreduce_spark.plans.registry import (  # noqa: E402
     ORACLES,
