@@ -5,17 +5,22 @@ Reference semantics reproduced here:
 - J3/U1 vertex universe: every id appearing as src OR dst is a vertex — the
   reference forces dst-only vertices into existence with a ``"!"`` placeholder
   emit (MR/GraphBuilderMapper.java:40-43, MR/GraphBuilderReducer.java:20-28);
-  in Spark that trick is simply union + distinct.
+  here ``vertex_table`` takes both endpoints from the deduped links.
 - A2 edge dedup: duplicate (src,dst) pairs contribute once — LinkedHashSet in
   MR/GraphBuilderReducer.java:16-28, LongNullHashSetEdges in
   GI/PageRankDriver.java:81-82 ("align with NetworkX").
 - A3 N = COUNT(DISTINCT vertex): MR/GraphBuilderReducer.java:30-32.
 - P2 dangling classification: a vertex with no out-edges
-  (MR/PageRankReducer.java:75, GI/PageRankVertex.java:54-60).
+  (MR/PageRankReducer.java:75, GI/PageRankVertex.java:54-60). The
+  reference reads it off an empty R2 adjacency list; ``vertex_table``
+  decides it in the same aggregate as the universe, so every PageRank
+  kernel reads ``dangling`` from ``GraphTables.vertices``.
 
-Scale notes: the build pays distinct()'s (src, dst) exchange with MAP-SIDE
-partial aggregation, then the by-src exchange into the merge join — two
-E-row shuffles, deliberately. A one-exchange rewrite (repartition("src")
+Scale notes: the edge-list text is parsed once, into the deduped links;
+the vertex table is aggregated from the links cache. The build pays
+distinct()'s (src, dst) exchange with MAP-SIDE partial aggregation, then
+the by-src exchange into the merge join — two E-row shuffles,
+deliberately. A one-exchange rewrite (repartition("src")
 first, dedup exchange-free on the subset-distribution rule — the
 ``dedup_src_sorted`` shape the non-PageRank kernels use) was tried in r13
 and REVERTED for this flagship build: with no partial aggregation before
@@ -51,7 +56,7 @@ class GraphTables:
     reused — the graph-partition-aware twin of the default
     hash-by-src layout."""
 
-    vertices: DataFrame  # (id BIGINT)
+    vertices: DataFrame  # (id BIGINT, dangling BOOLEAN)
     links: DataFrame  # (src BIGINT, dst BIGINT, outdeg BIGINT) — deduped
     n_vertices: int
     n_edges: int = 0  # deduped edge count (the links materialization count)
@@ -89,12 +94,29 @@ def dedup_src_sorted(edge_rows: DataFrame, agg: list | None = None) -> DataFrame
     return out.sortWithinPartitions("src")
 
 
+def vertex_table(
+    links: DataFrame, extra_vertices: DataFrame | None = None
+) -> DataFrame:
+    """(id, dangling) for every vertex of ``links`` — the J3/U1 universe
+    and the P2 classification in one aggregate. Each src contributes
+    (src, false), each dst and each ``extra_vertices`` id (single-column
+    ``id``) contributes (id, true); a vertex is dangling iff it never
+    appears as a src. A self-loop makes its vertex a src, so not
+    dangling, as in the reference."""
+    ends = links.select(F.col("src").alias("id"), F.lit(False).alias("d")).union(
+        links.select(F.col("dst").alias("id"), F.lit(True).alias("d"))
+    )
+    if extra_vertices is not None:
+        ends = ends.union(extra_vertices.select("id", F.lit(True).alias("d")))
+    return ends.groupBy("id").agg(F.bool_and("d").alias("dangling"))
+
+
 def build_graph(
     edges: DataFrame,
     num_partitions: int | None = None,
     extra_vertices: DataFrame | None = None,
 ) -> GraphTables:
-    """edges(src, dst) → cached (vertices, links-with-outdeg, N).
+    """edges(src, dst) → cached (vertices(id, dangling), links-with-outdeg, N).
 
     ``links`` is hash-partitioned by ``src`` and cached so the per-iteration
     scatter join reuses the partitioning (exchange reuse) instead of
@@ -106,22 +128,6 @@ def build_graph(
     declares an isolated (dangling) vertex.
     """
     dedup = edges.select("src", "dst").distinct()
-
-    # Vertex universe FIRST, links cache second — the r12 ordering, restored
-    # deliberately: the 2E-row universe.distinct() hash aggregate must run
-    # while storage memory is still empty. r13 left this block AFTER the
-    # links persist+count, so at S3 scale the universe aggregate competed
-    # with the freshly cached E-row links for unified memory (§5 spill setup)
-    # and solo builds ran 2-3x over the 28-45 s band on two hosts
-    # (VERDICT r13 "What's wrong" #1).
-    universe = edges.select(F.col("src").alias("id")).union(
-        edges.select(F.col("dst").alias("id"))
-    )
-    if extra_vertices is not None:
-        universe = universe.union(extra_vertices.select(F.col("id")))
-    vertices = universe.distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    n_vertices = vertices.count()
-
     outdeg = dedup.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     # The dedup ⋈ outdeg equi-join on src leaves its output hash-partitioned
     # by src ONLY if it is planned as a shuffle join; outdeg is a small V-row
@@ -138,6 +144,10 @@ def build_graph(
         links = links.repartition(num_partitions, "src")
     links = links.persist(StorageLevel.MEMORY_AND_DISK)
     n_edges = links.count()  # materialize before the loop starts
+    vertices = vertex_table(links, extra_vertices).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    n_vertices = vertices.count()
 
     return GraphTables(
         vertices=vertices,

@@ -52,30 +52,25 @@ def build_sym_cache(edges: DataFrame) -> DataFrame:
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iter: int = 50,
-    sym_edges: DataFrame | None = None,
+def _min_label_loop(
+    sym: DataFrame, labels: DataFrame, frontier: DataFrame, max_iter: int
 ) -> ComponentsResult:
-    """Min-label propagation over the undirected view of edges(src, dst).
-
-    ``sym_edges``: a pre-built ``build_sym_cache(edges)`` to share across
-    phases; when given, this function neither builds nor unpersists it.
-    """
-    sym = sym_edges if sym_edges is not None else build_sym_cache(edges)
-    vertices = sym.select(F.col("src").alias("id")).distinct()
-    labels = vertices.select("id", F.col("id").alias("label")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    """The WCC superstep loop: ``frontier`` (id, label) scatters its
+    labels along ``sym``, each vertex keeps the min of its own label and
+    its neighbours', and the next frontier is the vertices whose label
+    just dropped. A neighbour whose label did not change was already
+    taken in an earlier superstep, so a full run (``frontier=labels``)
+    gets the same labels, changed counts and iterations as scattering
+    every label every superstep. ``labels`` is persisted by the caller,
+    counted (N) and released here; later labels are checkpoint-backed."""
     n = labels.count()
-
     history: list[tuple[int, int, float]] = []
     converged = False
     iterations = 0
     for i in range(max_iter):
         t0 = time.monotonic()
         msgs = (
-            sym.join(labels.select(F.col("id").alias("src"), "label"), "src")
+            sym.join(frontier.select(F.col("id").alias("src"), "label"), "src")
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("label").alias("nbr_min"))
         )
@@ -98,14 +93,12 @@ def connected_components(
         )
         labels.unpersist()
         labels = new.select("id", "label")
+        frontier = new.filter(F.col("label") != F.col("old")).select("id", "label")
         iterations = i + 1
         history.append((iterations, changed, time.monotonic() - t0))
         if changed == 0:
             converged = True
             break
-
-    if sym_edges is None:
-        sym.unpersist()
     return ComponentsResult(
         components=labels.select("id", F.col("label").alias("component")),
         n_vertices=n,
@@ -113,6 +106,27 @@ def connected_components(
         converged=converged,
         history=history,
     )
+
+
+def connected_components(
+    edges: DataFrame,
+    max_iter: int = 50,
+    sym_edges: DataFrame | None = None,
+) -> ComponentsResult:
+    """Min-label propagation over the undirected view of edges(src, dst).
+
+    ``sym_edges``: a pre-built ``build_sym_cache(edges)`` to share across
+    phases; when given, this function neither builds nor unpersists it.
+    """
+    sym = sym_edges if sym_edges is not None else build_sym_cache(edges)
+    vertices = sym.select(F.col("src").alias("id")).distinct()
+    labels = vertices.select("id", F.col("id").alias("label")).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    result = _min_label_loop(sym, labels, labels, max_iter)
+    if sym_edges is None:
+        sym.unpersist()
+    return result
 
 
 def connected_components_incremental(
@@ -155,8 +169,6 @@ def connected_components_incremental(
         .select("id", F.coalesce(F.col("prev"), F.col("id")).alias("label"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    n = labels.count()
-
     frontier = (
         delta_edges.select(F.col("src").alias("id"))
         .union(delta_edges.select(F.col("dst").alias("id")))
@@ -164,48 +176,7 @@ def connected_components_incremental(
         .join(labels, "id")
     )
 
-    history: list[tuple[int, int, float]] = []
-    converged = False
-    iterations = 0
-    for i in range(max_iter):
-        t0 = time.monotonic()
-        msgs = (
-            sym.join(frontier.select(F.col("id").alias("src"), "label"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        new = (
-            labels.select("id", F.col("label").alias("old"))
-            .join(msgs, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("old"), F.coalesce(F.col("nbr_min"), F.col("old"))
-                ).alias("label"),
-                "old",
-            )
-        )
-        new = new.localCheckpoint(eager=False)
-        changed = int(
-            new.agg(
-                F.count(F.when(F.col("label") != F.col("old"), 1)).alias("c")
-            ).first()["c"]
-        )
-        labels.unpersist()
-        labels = new.select("id", "label")
-        frontier = new.filter(F.col("label") != F.col("old")).select("id", "label")
-        iterations = i + 1
-        history.append((iterations, changed, time.monotonic() - t0))
-        if changed == 0:
-            converged = True
-            break
-
+    result = _min_label_loop(sym, labels, frontier, max_iter)
     if sym_edges is None:
         sym.unpersist()
-    return ComponentsResult(
-        components=labels.select("id", F.col("label").alias("component")),
-        n_vertices=n,
-        iterations=iterations,
-        converged=converged,
-        history=history,
-    )
+    return result

@@ -51,7 +51,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from pagerank_giraph_vs_mapreduce_spark.graph.builder import GraphTables, build_graph
+from pagerank_giraph_vs_mapreduce_spark.graph.builder import (
+    GraphTables,
+    build_graph,
+    vertex_table,
+)
 
 # "auto" hub-split floor: below this out-degree a src can't meaningfully
 # straggle a task, so tiny/test graphs (where E/partitions rounds to a few)
@@ -193,20 +197,16 @@ def _dangling_mass() -> Column:
     return F.sum(F.when(F.col("dangling"), F.col("pr")).otherwise(0.0))
 
 
-def _init_ranks(
-    state: DataFrame, links: DataFrame, *cols: Column
-) -> tuple[DataFrame, float]:
+def _init_ranks(state: DataFrame, *cols: Column) -> tuple[DataFrame, float]:
     """Rank init shared by the single-vector kernels: persist
-    (id, *cols, dangling) for every vertex of ``state`` — ``dangling``
-    is static, so each superstep's one stats action also yields the next
-    dangling mass (A4+A5+A6) — and take the first dangling mass. Callers
+    (id, *cols, dangling) for every row of ``state``, a vertex table
+    (``vertex_table``, possibly joined with more columns), and take the
+    first dangling mass. ``dangling`` is static, so each superstep's one
+    stats action also yields the next dangling mass (A4+A5+A6). Callers
     run it before stamping their build time: it is part of graph load,
     the reference's Setup phase."""
-    out_src = links.select("src").distinct()
-    ranks = (
-        state.join(out_src, state.id == out_src.src, "left")
-        .select("id", *cols, F.col("src").isNull().alias("dangling"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    ranks = state.select("id", *cols, "dangling").persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     return ranks, float(ranks.agg(_dangling_mass()).first()[0] or 0.0)
 
@@ -360,7 +360,7 @@ def pagerank(
     whose out-degree exceeds the cap scatter through a broadcast join of
     just their ranks (see ``scatter_gather``) instead of piling their
     edge rows' join work onto the single task that owns their hash
-    partition. Default ``"auto"`` (VERDICT r07 item 7) derives the cap
+    partition. Default ``"auto"`` derives the cap
     at build time as ``max(HUB_AUTO_FLOOR, E // shuffle_partitions)`` —
     a src owning more edges than one partition's fair share IS the
     straggler bound on a 1000-executor cluster, while the floor keeps
@@ -409,7 +409,7 @@ def pagerank(
             )
             init_pr = F.coalesce(F.col("pr0"), init_pr)
         ranks, dangling_sum = _init_ranks(
-            state, g.links, init_pr.alias("pr"), *(["part"] if placed else [])
+            state, init_pr.alias("pr"), *(["part"] if placed else [])
         )
         # Hub split (README.md:417-418 pathology): sources above the
         # out-degree cap are collected ONCE here — a bounded driver list (at
@@ -504,7 +504,7 @@ def personalized_pagerank(
             F.col("id").isin(src_ids), F.lit(1.0 / len(sources))
         ).otherwise(F.lit(0.0))
         ranks, dangling_sum = _init_ranks(
-            g.vertices, g.links, reset.alias("reset"), reset.alias("pr")
+            g.vertices, reset.alias("reset"), reset.alias("pr")
         )
 
         def update(contrib: Column, dsum: float) -> Column:
@@ -552,7 +552,11 @@ def personalized_pagerank_multi(
         [(int(s), int(s), 1.0) for s in seeds], "s bigint, id bigint, pr double"
     ).localCheckpoint(eager=True)
     seeds_df = spark.createDataFrame([(int(s),) for s in seeds], "s bigint")
-    out_src = g.links.select("src").distinct()
+    # A seed absent from the graph is not in out_src, so the left_anti
+    # below counts its mass as dangling.
+    out_src = g.vertices.filter(~F.col("dangling")).select(
+        F.col("id").alias("src")
+    )
     for _ in range(k):
         contribs = (
             state.join(g.links, state.id == g.links.src)
@@ -645,18 +649,12 @@ def pagerank_weighted(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     try:
-        verts = (
-            wedges.select(F.col("src").alias("id"))
-            .union(wedges.select(F.col("dst").alias("id")))
-            .distinct()
-        )
+        verts = vertex_table(links)
         n = verts.count()
         if n == 0:
             empty = edges.sparkSession.createDataFrame([], "id bigint, pr double")
             return PageRankResult(empty, 0, 0, True, [])
-        ranks, dangling_sum = _init_ranks(
-            verts, links, F.lit(1.0 / n).alias("pr")
-        )
+        ranks, dangling_sum = _init_ranks(verts, F.lit(1.0 / n).alias("pr"))
         return _supersteps(
             links, ranks, dangling_sum, _uniform_update(damping, n), n,
             max_iter, tol, min_iter,

@@ -72,7 +72,7 @@ def build_placed_graph(
     edges: DataFrame, parts: DataFrame, num_partitions: int
 ):
     """PLACED twin of graph/builder.py:build_graph for the PageRank
-    kernel (VERDICT r12 item 2 — the reference's hot-spot pathology,
+    kernel (the reference's hot-spot pathology,
     README.md:386,417-418, is a PageRank-shuffle claim; this closes the
     placement loop on PageRank itself, not only WCC).
 

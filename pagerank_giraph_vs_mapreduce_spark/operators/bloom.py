@@ -97,7 +97,7 @@ def bloom_might_contain(
     ever set a bit there) reads NULL and the conjunct is false, not an
     ANSI map-key error.
 
-    Robustness (ADVICE r06): the broadcast column is attached under the
+    Robustness: the broadcast column is attached under the
     reserved name ``__bloom_bits`` (not ``bloom``, which a fact table may
     legitimately carry), and ``key_col`` is backtick-quoted into the
     generated expressions so names needing quoting probe correctly."""

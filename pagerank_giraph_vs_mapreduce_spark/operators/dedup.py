@@ -238,7 +238,7 @@ def compact_band_index(
     generations persist (re-run the compaction or re-register the table
     to recover — no data loss window).
 
-    Visibility contract (ADVICE r06): the drop→rename gap means a probe
+    Visibility contract: the drop→rename gap means a probe
     issued DURING the repoint can fail with TABLE_NOT_FOUND — Spark's
     session catalog has no atomic rename-over / CREATE OR REPLACE for
     external bucketed tables, so the gap cannot be closed here. Callers

@@ -345,7 +345,7 @@ def extract_features(media: DataFrame) -> DataFrame:
 
 
 def decode_external(media: DataFrame, codec, formats: tuple[str, ...] = ()):
-    """The C-codec seam as a first-class API (VERDICT r08 item 5): route
+    """The C-codec seam as a first-class API: route
     payloads through an EXTERNAL decoder — the production path for the
     one media class this repo deliberately does not decode in Python
     (lossy VP8 / AV1 / H.264 bitstreams; see SCALING.md "Lossy video").
@@ -1195,8 +1195,7 @@ def ivf_zlib_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
     luma plane text[16f, 16f+16) (space-padded), fourcc ZL00. Unlike
     ivf_payload (opaque stand-in payloads), these frames round-trip
     through an actual C codec (zlib), so the container -> seam -> codec
-    -> features chain is provable end-to-end with an exact oracle
-    (VERDICT r09 item 4)."""
+    -> features chain is provable end-to-end with an exact oracle."""
     import zlib
 
     from pagerank_giraph_vs_mapreduce_spark.operators.ivf_container import (
@@ -1292,7 +1291,7 @@ def ivf_explode_frames(media: DataFrame) -> DataFrame:
 def zlib_luma16_codec(payload: bytes) -> dict | None:
     """A REAL external codec for the decode_external seam: inflate the
     frame with zlib (an actual C library — the first genuine codec
-    driven through the seam, VERDICT r09 item 4) and featurize the
+    driven through the seam) and featurize the
     decoded 16-byte 8x2 luma plane. Reports the DECODED byte stats
     (n_bytes/first_byte/byte_mean describe the decompressed plane — the
     codec-override path of decode_external's contract), so every output
@@ -1447,7 +1446,7 @@ def wav_decimate(media: DataFrame, factor: int = 4) -> DataFrame:
 
 
 def wrongtype_marker_codec(payload: bytes) -> dict | None:
-    """Poison-mix probe codec (VERDICT r10 item 8): payloads carrying the
+    """Poison-mix probe codec: payloads carrying the
     b'WT' marker get a WRONG-TYPED return (width is a non-numeric
     string) so decode_external's per-row coercion contract — degrade
     exactly that row to the byte-stat stub, never the batch — is

@@ -90,7 +90,7 @@ def cosine_scores_vectorized(
     of evaluating the aggregate-lambda higher-order expression per row.
     The HOF form (``_dot``/``_norm``) does not whole-stage-codegen, so at
     100 TB the distance kernel — the hot loop of every ANN probe — is
-    worth a measured comparison per scale (VERDICT_r04 item 6; decision
+    worth a measured comparison per scale (decision
     in SCALING.md §10). Plan shape is identical to ``cosine_topk``:
     broadcast 1-row query, narrow map over the scan, no shuffle.
 

@@ -404,7 +404,7 @@ def bpe_learn_scaled(
     merges: int = 64,
     sample_hexmax: str | None = "4",
 ) -> DataFrame:
-    """BPE training at REAL vocabulary sizes (VERDICT r06 item 6) — the
+    """BPE training at REAL vocabulary sizes — the
     100 TB discipline ``bpe_learn``'s docstring promises, enforced:
 
     1. **Bounded training corpus**: a deterministic md5 gate keeps docs
@@ -533,7 +533,7 @@ def bpe_learn_batched(
     merges_per_round: int = 16,
     sample_hexmax: str | None = "4",
 ) -> DataFrame:
-    """Batched BPE training (VERDICT r07 item 4): ``bpe_learn_scaled``
+    """Batched BPE training: ``bpe_learn_scaled``
     pays ONE driver round per merge — measured at 0.165-0.312 s/merge,
     i.e. ~2.8 h for a production 32k-merge vocab. This mode takes the
     top-B symbol-disjoint pairs per round instead, cutting driver rounds

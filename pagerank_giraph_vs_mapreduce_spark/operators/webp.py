@@ -1,4 +1,4 @@
-"""WebP-lossless (VP8L) codec, pure stdlib — VERDICT r07 item 5.
+"""WebP-lossless (VP8L) codec, pure stdlib.
 
 Implemented from the public VP8L bitstream specification
 (https://developers.google.com/speed/webp/docs/webp_lossless_bitstream_specification),

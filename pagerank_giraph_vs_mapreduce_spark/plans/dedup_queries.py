@@ -646,8 +646,8 @@ FROM jac WHERE jaccard >= 0.8
 GROUP BY id_new""",
 )
 def dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental dedup against the DURABLE band index (VERDICT_r04 item
-    5): the corpus's LSH bands are written ONCE as a bucketed(16 on band,
+    """Incremental dedup against the DURABLE band index:
+    the corpus's LSH bands are written ONCE as a bucketed(16 on band,
     bkey) sorted parquet table (operators/dedup.py:write_band_index) and
     every new batch probes it via probe_band_index — a sort-merge join in
     which the index side is scanned in place with NO exchange (bucketing

@@ -1002,7 +1002,7 @@ def g_louvain_w_r2(spark: SparkSession, sf_dir: str) -> DataFrame:
 def g_louvain_r2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two synchronous one-level MODULARITY-optimization sweeps (the
     Louvain local-move phase, determinized with min-community-id
-    tie-breaks — VERDICT r09 item 3): community detection by the metric
+    tie-breaks): community detection by the metric
     a real graph-curation pipeline actually reports, where LPA
     (g_lpa_r3) only finds frequency communities. Every vertex scores
     joining each neighboring community by the Blondel et al. gain
@@ -1602,8 +1602,8 @@ _WCC_STREAM_SHARDS: dict[str, str] = {}
 @query("g_wcc_delta_stream", oracle=_WCC_STREAM_SQL)
 def g_wcc_delta_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING WCC maintenance, driver-certified end-to-end (the
-    incremental-maintenance family's streaming twin — VERDICT r12 item
-    8): the derived edge table arrives as three file shards (src % 3,
+    incremental-maintenance family's streaming twin):
+    the derived edge table arrives as three file shards (src % 3,
     modification-time order) through a real Structured Streaming file
     source; each micro-batch appends its edges to a durable
     batch_id-partitioned edge table and advances a durable label table
@@ -1833,7 +1833,7 @@ WHERE rk <= {AA_PV_K}"""
 @query("g_link_aa_pervertex", oracle=_AA_PV_SQL)
 def g_link_aa_pervertex(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vertex link-prediction shortlist (graph/motifs.py:
-    adamic_adar_pervertex — VERDICT r07 item 6): every vertex's top-3
+    adamic_adar_pervertex): every vertex's top-3
     non-adjacent Adamic-Adar partners via a window rank over the SAME
     hub-capped scored-pair table as g_link_adamic_adar — the product
     "k candidates per node" shape. The extra cost over the global
@@ -2012,8 +2012,8 @@ assert _BC_NORM_SQL != _BC_SQL
 @query("g_betweenness_k3_norm", oracle=_BC_NORM_SQL)
 def g_betweenness_k3_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """g_betweenness_k3 with the standard directed-Brandes normalization
-    (graph/paths.py:truncated_betweenness(normalized=True) — VERDICT r08
-    item 8): bc * n / (k (n-1) (n-2)), the NetworkX rescale combining
+    (graph/paths.py:truncated_betweenness(normalized=True)):
+    bc * n / (k (n-1) (n-2)), the NetworkX rescale combining
     pair normalization with the sampled-source n/k correction, pinned to
     networkx.betweenness_centrality by the seeded-digraph property test
     in tests/test_round9_ops.py."""
@@ -2186,7 +2186,7 @@ def g_degree_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     number that says HOW skewed the graph is (0 = regular, ->1 = one
     hub owns everything): the statistic behind every hub-cap/salting
     decision this engine makes (two_hop/AA/square caps, the pagerank
-    hub split). DEFAULT = the binned form (VERDICT r10 What's-wrong #1):
+    hub split). DEFAULT = the binned form:
     one map-side-combined aggregate folds V degree rows into the hybrid
     bin table (see GINI_D0 — identity bins below 1024, sqrt bins above),
     then the grouped rank-sum identity
@@ -3006,7 +3006,7 @@ FROM e0 JOIN k4leaf pa ON pa.id = e0.u JOIN k4leaf pb ON pb.id = e0.v""",
     ),
 )
 def g_partition_k4_cut_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """4-way partition QUALITY observability (VERDICT r12 item 7): the
+    """4-way partition QUALITY observability: the
     k4 leaf edge cut plus all four side sizes — the exact quantities the
     placement consumer (graph/placement.py) relies on when it keys the
     edge table by a 4-part assignment, where g_partition_cut_stats only

@@ -109,8 +109,8 @@ def mm_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 FROM documents""",
 )
 def mm_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL baseline-JPEG codec through the multimodal seam (VERDICT r06
-    item 3): each doc's first 8 text bytes become one constant 8x8 block
+    """REAL baseline-JPEG codec through the multimodal seam:
+    each doc's first 8 text bytes become one constant 8x8 block
     each of a genuine 32x16 grayscale JPEG (jpeg_payload), then
     extract_features detects the FFD8 magic and runs the full decoder —
     marker parse, DHT canonical Huffman, entropy decode with byte
@@ -147,8 +147,8 @@ def mm_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 FROM documents""",
 )
 def mm_jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL progressive-JPEG (SOF2) decode through the multimodal seam
-    (VERDICT r07 "What's missing" #1): the same block-constant fixture
+    """REAL progressive-JPEG (SOF2) decode through the multimodal seam:
+    the same block-constant fixture
     as mm_jpeg_decode, but the file is written with a genuine progressive
     scan script — interleaved DC-first at Al=1, successive-approximation
     DC refinement, and EOB-run-coded AC band scans — and the decoder
@@ -191,7 +191,7 @@ FROM documents""",
 )
 def mm_webp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL lossless-WebP codec through the multimodal seam
-    (operators/webp.py — VERDICT r07 item 5): each doc's first 64 text
+    (operators/webp.py): each doc's first 64 text
     bytes become a genuine VP8L 16x4 grayscale WebP (canonical prefix
     codes, greedy LZ77 backrefs, 5-bit color cache), then
     extract_features detects the RIFF....WEBP magic and runs the full
@@ -590,7 +590,7 @@ FROM px""",
 )
 def mm_ivf_external_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A REAL external codec driven through the decode_external seam
-    (VERDICT r09 item 4 — the seam was previously pinned only against a
+    (the seam was previously pinned only against a
     fake): documents become genuine IVF containers whose frame payloads
     are genuine zlib streams (ivf_zlib_payload), the container parser
     hands each frame's bitstream to the seam (ivf_explode_frames), and
@@ -797,7 +797,7 @@ FROM px""",
 )
 def mm_external_poison_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The external-seam degradation contract under the DRIVER GATE
-    (VERDICT r10 item 8 — previously pinned only in pytest): one frame
+    (previously pinned only in pytest): one frame
     stream mixes healthy zlib frames with all three poison classes —
     corrupt bitstreams (decompression raises), NULL payloads, and a
     marker that makes the codec return a WRONG-TYPED width — chosen by

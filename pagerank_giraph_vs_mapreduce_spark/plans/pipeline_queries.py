@@ -384,7 +384,7 @@ def pipeline_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 PACK_BUDGET = 512
-PACK_SHARDS = 8  # per-domain parallel packing lanes (VERDICT_r04 item 3)
+PACK_SHARDS = 8  # per-domain parallel packing lanes
 
 
 @query(
@@ -429,8 +429,8 @@ def pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     pretraining batches do.
 
     The running-sum window is keyed on (source, shard) with
-    shard = doc_id % {PACK_SHARDS} — NOT on raw source (VERDICT_r04 item
-    3): at 100 TB a whale domain would serialize its entire running sum
+    shard = doc_id % {PACK_SHARDS} — NOT on raw source:
+    at 100 TB a whale domain would serialize its entire running sum
     through one task, so each domain is split into {PACK_SHARDS}
     deterministic shards that pack independently and in parallel. Global
     bin ids stay deterministic via per-shard bin bases: shard s's bins
@@ -767,7 +767,7 @@ def _rag_embedded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # per-token dim: SAME polyhash as text_feature_hash_64 (position-
     # weighted ascii sum mod dims) so the oracle shares the formula;
-    # computed via the one-pass char-array helper (VERDICT r06 item 5)
+    # computed via the one-pass char-array helper
     from pagerank_giraph_vs_mapreduce_spark.functions.hashing import (
         position_weighted_sum,
     )
@@ -1073,7 +1073,7 @@ WHERE n.nrm > 0
 ORDER BY cos_sim DESC, d.doc_id, d.chunk_id LIMIT {RAG_TOPK}""",
 )
 def pipeline_rag_retrieve_encoder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REAL-ENCODER swap the RAG plan promises (VERDICT r06 item 4):
+    """The REAL-ENCODER swap the RAG plan promises:
     identical retrieval to pipeline_rag_retrieve, but the embedding
     projection is a ``mapInPandas`` MODEL — an Arrow-batched Python
     stage standing in for any transformer forward pass. The stand-in is
@@ -1602,8 +1602,8 @@ GROUP BY wb, wl, ws"""
 
 @query("pipeline_train_quality_lr_mb", oracle=_logreg_mb_oracle())
 def pipeline_train_quality_lr_mb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mini-batch + L2 variant of the distributed GD trainer (VERDICT r08
-    item 7): full-batch GD at 100 TB means every step scans everything,
+    """Mini-batch + L2 variant of the distributed GD trainer:
+    full-batch GD at 100 TB means every step scans everything,
     so step t aggregates only the rows whose deterministic md5 bucket
     (the repo's sampling discipline) equals t % 4 — each step's gradient
     input shrinks to ~1/4 of the corpus, and the bucket predicate is a

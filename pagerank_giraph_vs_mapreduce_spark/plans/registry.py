@@ -48,7 +48,7 @@ _QUERY_MODULES = (
 
 # The driver's correctness gate checks queries in registration order with a
 # ~50-query budget per round — so registration order IS hard-signal coverage.
-# Round-13 budget math (VERDICT r12 "Next round" #3): the 19 remaining
+# Round-13 budget math: the 19 remaining
 # r06-stale rows LEAD (after they certify, no query's newest driver row
 # predates r07), then the queries NEW this round (the k4 cut-stats
 # observability finisher and the incremental-maintenance family), then the

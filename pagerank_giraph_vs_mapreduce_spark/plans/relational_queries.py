@@ -1109,7 +1109,7 @@ FROM vers""",
 )
 def rel_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD Type-2 history build — rel_upsert_merge extended from
-    latest-wins to VERSIONED rows (VERDICT_r04 item 7), the ingest
+    latest-wins to VERSIONED rows, the ingest
     pattern a long-lived corpus pipeline hits when provenance must
     survive updates: a stream of keyed change versions (here three
     deterministic CDC batches over orders, seq = batch ordinal) becomes
@@ -2345,7 +2345,7 @@ def rel_er_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # right(s, 2) is engine-agnostic for strings shorter than 2 chars
     # (both engines return the whole string); the substr(length-1, 2)
     # form diverged there — Spark clamps start 0 to 1, DuckDB clamps the
-    # width (r10 ADVICE).
+    # width.
     blk = dirty.withColumn("bk", F.expr("right(dname, 2)"))
     cb = cust.withColumn("bk", F.expr("right(c_name, 2)"))
     # threshold form: the JVM bails out of the DP as soon as the running

@@ -61,7 +61,7 @@ ORDER BY cos_sim DESC, e.vec_id LIMIT {TOP_K}""",
 )
 def sim_cosine_top10_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Arrow/numpy distance-kernel twin of sim_cosine_top10
-    (operators/similarity.py:cosine_topk_vectorized, VERDICT_r04 item 6):
+    (operators/similarity.py:cosine_topk_vectorized):
     same oracle, same 6-dp contract — certifying that the vectorized
     kernel is drop-in value-identical to the higher-order-function form.
     Which one wins depends on scale (SCALING.md §10)."""

@@ -492,7 +492,7 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 break
             time.sleep(0.3)
         else:
-            # ADVICE r06: a silent partial drain would surface as an
+            # A silent partial drain would surface as an
             # inscrutable oracle hash mismatch on a slow machine — fail
             # loudly at the source instead.
             raise TimeoutError(
@@ -584,7 +584,7 @@ def source_warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 FROM documents""",
 )
 def source_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Avro OCF ingestion (sources/avro_ocf.py — VERDICT r07 item 8,
+    """Avro OCF ingestion (sources/avro_ocf.py,
     upgraded from document-out): the runtime lacks the external
     spark-avro module and any Python avro package, so container framing
     and the binary encoding are implemented from the public spec.

@@ -329,8 +329,8 @@ def _late_arrival_src(spark: SparkSession, sf_dir: str) -> str:
 FROM events GROUP BY 1, 2""",
 )
 def stream_late_data_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermark lateness accounting, driver-certified (VERDICT_r04 item
-    8): the events table arrives as three micro-batches in SCRAMBLED
+    """Watermark lateness accounting, driver-certified:
+    the events table arrives as three micro-batches in SCRAMBLED
     event-time order (back-of-hour rows first, then every front-of-hour
     row — up to ~30 days late vs the watermark frontier — then a
     far-future sentinel), through an APPEND-mode tumbling aggregation

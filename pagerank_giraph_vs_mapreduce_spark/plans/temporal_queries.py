@@ -102,7 +102,7 @@ FROM probe p ASOF LEFT JOIN dim d
   ON p.user_id = d.user_id AND d.vf_us <= p.ts_us""",
 )
 def rel_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ASOF join against a VERSIONED DIMENSION (VERDICT r09 item 2): each
+    """ASOF join against a VERSIONED DIMENSION: each
     event picks up the newest dimension version at-or-before its
     timestamp — the lookup that pairs with rel_scd2_history's versioned
     rows (there the history is BUILT; here it is PROBED by event time).

@@ -610,8 +610,8 @@ BPE_SAMPLE_HEXMAX = "4"  # md5 first-hex gate: ~25% of docs train the vocab
     oracle=_bpe_oracle(BPE_MERGES_SCALED, gate_hexmax=BPE_SAMPLE_HEXMAX),
 )
 def text_bpe_merges_k64(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE training at depth (operators/text.py:bpe_learn_scaled —
-    VERDICT r06 item 6): 64 merge rounds over a deterministic 25%
+    """BPE training at depth (operators/text.py:bpe_learn_scaled):
+    64 merge rounds over a deterministic 25%
     md5-sampled training corpus. Unlike the lazy 3-round chain, each
     round materializes the vocabulary with an eager localCheckpoint
     (plan depth O(1), not O(merges)) and collects exactly one
@@ -765,8 +765,8 @@ def _bpe_batched_oracle(
     ),
 )
 def text_bpe_merges_k64_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched BPE training (operators/text.py:bpe_learn_batched —
-    VERDICT r07 item 4): 64 merges in ~5 driver rounds instead of 64, by
+    """Batched BPE training (operators/text.py:bpe_learn_batched):
+    64 merges in ~5 driver rounds instead of 64, by
     greedy-selecting the top-16 symbol-disjoint pairs per round and
     applying them in ONE map-literal fold. Symbol-disjointness makes the
     simultaneous apply equal the sequential apply, so the only classic-BPE

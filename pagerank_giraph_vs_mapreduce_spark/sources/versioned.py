@@ -94,7 +94,7 @@ def vacuum(
     vacuum (files still present while its scan runs locally) or never
     sees it.
 
-    Concurrency contract (ADVICE r06): this layout assumes a SINGLE
+    Concurrency contract: this layout assumes a SINGLE
     WRITER per table — ``write_version`` picks v = last+1 without a
     lock, so two concurrent writers can claim the same version and
     rmtree each other's data dir. Vacuum may run concurrently with that

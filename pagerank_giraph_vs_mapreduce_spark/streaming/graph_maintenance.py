@@ -1,5 +1,5 @@
 """Streaming graph maintenance — edge-delta streams updating a durable
-WCC labels table (VERDICT r12 item 8: the engine's distinctive
+WCC labels table (the engine's distinctive
 iterate-under-change surface, extended from the batch
 ``g_wcc_incremental`` / ``g_pagerank_incremental`` queries to a real
 Structured Streaming loop).

@@ -7,7 +7,7 @@ from pagerank_giraph_vs_mapreduce_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", cpus=8, shuffle_partitions=8)
+    s = get_spark(app_name="tests", shuffle_partitions=8)
     yield s
 
 

@@ -96,11 +96,18 @@ def test_convergence_monotone_and_stops(spark):
 
 
 def test_build_graph_counts(spark):
-    """J3/U1/A3: dst-only vertex 9 counted; A2: dup edge deduped in links."""
-    g = build_graph(make_edges(spark, [(1, 2), (1, 2), (2, 9)]))
-    assert g.n_vertices == 3
+    """J3/U1/A3: dst-only vertex 9 counted; A2: dup edge deduped in links;
+    P2: the vertex table flags 9 (dst-only) and 7 (bare extra id) as
+    dangling, and not 5, whose only edge is a self-loop."""
+    g = build_graph(
+        make_edges(spark, [(1, 2), (1, 2), (2, 9), (5, 5)]),
+        extra_vertices=spark.createDataFrame([(7,)], "id bigint"),
+    )
+    assert g.n_vertices == 5
     rows = {(r["src"], r["dst"], r["outdeg"]) for r in g.links.collect()}
-    assert rows == {(1, 2, 1), (2, 9, 1)}
+    assert rows == {(1, 2, 1), (2, 9, 1), (5, 5, 1)}
+    flags = {r["id"]: r["dangling"] for r in g.vertices.collect()}
+    assert flags == {1: False, 2: False, 5: False, 7: True, 9: True}
     g.unpersist()
 
 

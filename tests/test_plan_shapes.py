@@ -255,3 +255,27 @@ def test_band_index_compaction_preserves_rows_and_bucketing(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
         spark.sql("DROP TABLE IF EXISTS band_idx_compact_t")
+
+
+def test_vertex_table_reads_the_links_cache_not_the_text(spark, tmp_path):
+    """The edge-list text is parsed once, into the links cache: the
+    vertex universe and dangling flag are aggregated from that cache,
+    so every leaf under ``g.vertices`` (with cached subplans swapped in)
+    is an InMemoryRelation and none is the text relation."""
+    from pagerank_giraph_vs_mapreduce_spark.graph.builder import build_graph
+    from pagerank_giraph_vs_mapreduce_spark.sources.edgelist import read_edgelist
+
+    p = tmp_path / "edges.txt"
+    p.write_text("# header\n1\t2\n2\t3\n3\t1\n3\t4\n")
+    g = build_graph(read_edgelist(spark, str(p)))
+    try:
+        cache_manager = spark._jsparkSession.sharedState().cacheManager()
+        root = g.vertices._jdf.queryExecution().analyzed()
+        leaves = set()
+        for i in range(root.children().size()):
+            sub = cache_manager.useCachedData(root.children().apply(i))
+            found = sub.collectLeaves()
+            leaves |= {found.apply(j).nodeName() for j in range(found.size())}
+        assert leaves == {"InMemoryRelation"}, leaves
+    finally:
+        g.unpersist()

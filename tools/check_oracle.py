@@ -53,7 +53,7 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     load_all_queries()
-    spark = get_spark(cpus=8, shuffle_partitions=8)
+    spark = get_spark(shuffle_partitions=8)
 
     con = duckdb.connect()
     for t in TABLES:
