@@ -31,9 +31,9 @@ s/iter median in the same JVM at S3 scale. We keep ``links(src, dst,
 outdeg)`` as flat rows rather than the reference's ``collect_list``
 adjacency encoding (R2): flat rows shuffle-join without exploding
 arrays and stay columnar. The hub-vertex hot-key pathology the reference
-documents (README.md:417-418) is handled by the hub split in
-``graph/pagerank.py:scatter_gather``: AQE's skew join never fires
-through the cached links.
+documents (README.md:417-418) stays: the links cache is hash-partitioned
+by src, so a hub's out-edges land on one partition, and AQE's skew join
+never fires through the cached links (``graph/pagerank.py:scatter_gather``).
 """
 
 from __future__ import annotations

@@ -57,11 +57,6 @@ from pagerank_giraph_vs_mapreduce_spark.graph.builder import (
     vertex_table,
 )
 
-# "auto" hub-split floor: below this out-degree a src can't meaningfully
-# straggle a task, so tiny/test graphs (where E/partitions rounds to a few)
-# never take the broadcast branch and keep the exact unsplit plan.
-HUB_AUTO_FLOOR = 4096
-
 
 @dataclass
 class IterationStats:
@@ -93,10 +88,6 @@ class PageRankResult:
     # Graph build + rank init wall time — the reference's Setup phase
     # (Giraph's 19.06 s graph load on web-Google, README.md:228).
     build_seconds: float = 0.0
-    # Hub sources routed through the broadcast scatter branch (empty =
-    # plain path). Observability for the "auto" threshold: a uniform
-    # graph must report [] here.
-    hub_ids: list[int] = field(default_factory=list)
 
 
 def latest_checkpoint(spark, checkpoint_dir: str):
@@ -136,25 +127,22 @@ def latest_checkpoint(spark, checkpoint_dir: str):
 def scatter_gather(
     links: DataFrame,
     ranks: DataFrame,
-    hub_ids: list[int] | None = None,
     share: Column | None = None,
 ) -> DataFrame:
     """One J1/C2/A1 superstep message pass: scatter ``share`` (default
     pr/outdeg; the weighted kernel passes pr*w/wsum) along the cached
-    links, gather by dst. ``hub_ids`` (hot out-degree sources,
-    precomputed once per graph) routes the hub edge mass through a
-    BROADCAST join of just those sources' ranks — the hub rows never
-    shuffle and never pile one join partition onto one task.
+    links, gather by dst. One join: ``links ⋈ ranks`` on src, or on
+    (part, src) in placed mode (below).
 
-    Why not AQE skew-join: ``links`` is cached pre-partitioned and the
-    SMJ reads it via InMemoryTableScan — there is NO shuffle stage on
-    either join side for OptimizeSkewedJoin to split (measured: the same
-    join with uncached inputs and lowered thresholds does get
-    ``skew=true``; through the cache it never does —
-    tests/test_skew_scatter.py pins both). Explicit hub splitting is the
-    plan-stable fix: hot srcs are few by definition (outdeg above a cap
-    bounds their count at E/cap), so their (src, pr) rows broadcast for
-    pennies while their edge rows — the actual mass — stay put.
+    Hub sources: ``links`` is cached hash-partitioned by src, so all of
+    a hub's out-edges sit on one cached partition and one task joins
+    them, whatever the plan does with the hub's single rank row. AQE's
+    skew-join cannot split that task either: the SMJ reads the links
+    side via InMemoryTableScan, so there is no shuffle stage on it for
+    OptimizeSkewedJoin to split (tests/test_skew_scatter.py pins both
+    the uncached split and the cached non-split). Spreading one
+    source's edges over tasks is a vertex-cut (PowerGraph), which this
+    kernel does not do.
 
     PLACED mode (ranks carry the static ``part`` label that ``pagerank``
     adds for a placed build — see graph/placement.py:build_placed_graph;
@@ -174,23 +162,12 @@ def scatter_gather(
         join_keys = "src"
     if share is None:
         share = F.col("pr") / F.col("outdeg")
-    contrib = lambda df: df.select(  # noqa: E731
-        F.col("dst").alias("id"), share.alias("contrib")
+    return (
+        links.join(ranks_src, join_keys)
+        .select(F.col("dst").alias("id"), share.alias("contrib"))
+        .groupBy("id")
+        .agg(F.sum("contrib").alias("contrib"))
     )
-    if hub_ids:
-        hot = F.col("src").isin(hub_ids)
-        scattered = contrib(
-            links.filter(~hot).join(ranks_src.filter(~hot), join_keys)
-        ).unionAll(
-            contrib(
-                links.filter(hot).join(
-                    F.broadcast(ranks_src.filter(hot)), join_keys
-                )
-            )
-        )
-    else:
-        scattered = contrib(links.join(ranks_src, join_keys))
-    return scattered.groupBy("id").agg(F.sum("contrib").alias("contrib"))
 
 
 def _dangling_mass() -> Column:
@@ -230,7 +207,6 @@ def _supersteps(
     tol: float,
     min_iter: int,
     share: Column | None = None,
-    hub_ids: list[int] | None = None,
     phase_timing: bool = False,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 10,
@@ -253,9 +229,8 @@ def _supersteps(
         for i in range(max_iter):
             t0 = time.monotonic()
             # J1/C2 scatter + A1 gather: links is cached pre-partitioned by
-            # src, so only the V-row ranks side shuffles here; hub sources
-            # (if any) scatter via broadcast instead.
-            msgs = scatter_gather(links, ranks, hub_ids, share)
+            # src, so only the V-row ranks side shuffles here.
+            msgs = scatter_gather(links, ranks, share)
             new = (
                 ranks.select(*carry, F.col("pr").alias("pr_old"))
                 .join(msgs, "id", "left")
@@ -333,7 +308,6 @@ def pagerank(
     phase_timing: bool = False,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 10,
-    hub_split_outdeg: int | None | str = "auto",
 ) -> PageRankResult:
     """Run PageRank over edges(src, dst); returns ranks + convergence history.
 
@@ -355,20 +329,6 @@ def pagerank(
     opt-in, without paying the per-iteration materialization tax that is
     MR's documented 3.7× slowdown. Vertices missing from the provided state
     are seeded uniformly at 1/N.
-
-    ``hub_split_outdeg`` caps the per-task cost of hub SOURCES: srcs
-    whose out-degree exceeds the cap scatter through a broadcast join of
-    just their ranks (see ``scatter_gather``) instead of piling their
-    edge rows' join work onto the single task that owns their hash
-    partition. Default ``"auto"`` derives the cap
-    at build time as ``max(HUB_AUTO_FLOOR, E // shuffle_partitions)`` —
-    a src owning more edges than one partition's fair share IS the
-    straggler bound on a 1000-executor cluster, while the floor keeps
-    test-sized graphs (where E/P rounds to a few) off the split path.
-    On uniform graphs no src exceeds the fair share, so hub_ids is
-    empty and the plan is bit-identical to the unsplit path (pinned by
-    tests/test_skew_scatter.py). Pass an int to pin the cap manually or
-    ``None`` to disable; the id list collects at most E/cap entries.
 
     ``checkpoint_dir`` (default off — local behavior unchanged) writes the
     ranks table durably every ``checkpoint_every`` supersteps as parquet
@@ -411,27 +371,6 @@ def pagerank(
         ranks, dangling_sum = _init_ranks(
             state, init_pr.alias("pr"), *(["part"] if placed else [])
         )
-        # Hub split (README.md:417-418 pathology): sources above the
-        # out-degree cap are collected ONCE here — a bounded driver list (at
-        # most E/cap ids, e.g. ≤100 for cap=1M on 100M edges; same
-        # plan-constant class as the per-superstep stats action) — and their
-        # scatter rides a broadcast join every superstep (see scatter_gather).
-        hub_ids: list[int] = []
-        if hub_split_outdeg == "auto":
-            shuffle_parts = int(
-                spark.conf.get("spark.sql.shuffle.partitions", "200")
-            )
-            hub_split_outdeg = max(
-                HUB_AUTO_FLOOR, g.n_edges // max(shuffle_parts, 1)
-            )
-        if hub_split_outdeg is not None:
-            hub_ids = [
-                r["src"]
-                for r in g.links.filter(F.col("outdeg") > hub_split_outdeg)
-                .select("src")
-                .distinct()
-                .collect()
-            ]
         build_seconds = time.monotonic() - t_setup
 
         # Placed mode leans on SUBSET co-partitioning: the links cache is
@@ -450,7 +389,6 @@ def pagerank(
             result = _supersteps(
                 g.links, ranks, dangling_sum, _uniform_update(damping, n), n,
                 max_iter, tol, min_iter,
-                hub_ids=hub_ids,
                 phase_timing=phase_timing,
                 checkpoint_dir=checkpoint_dir,
                 checkpoint_every=checkpoint_every,
@@ -462,7 +400,6 @@ def pagerank(
         if own_graph:
             g.unpersist()
     result.build_seconds = build_seconds
-    result.hub_ids = hub_ids
     return result
 
 

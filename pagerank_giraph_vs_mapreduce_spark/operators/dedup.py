@@ -87,20 +87,34 @@ def shingles(
     """Exploded (id, code) view of shingle_code_array (distinct by
     construction — the dedup happened per-row, shuffle-free).
 
-    The array frame is persisted BEFORE the explode: whole-stage codegen
-    inlines a computed generator input into the Generate loop, so an
-    uncached ``explode(codes)`` re-evaluates the O(len) code-array
-    expression once per OUTPUT row — O(len²) per document, measured 270 s
-    vs ~2 s at sf0.1 (5000 docs x ~200 shingles). Persisting materializes
-    each row's array exactly once (the same discipline
-    minhash_near_dups applies); at 100 TB this cache is the corpus's
-    shingle table and would instead be a written intermediate."""
-    from pyspark.storagelevel import StorageLevel
-
-    arr = shingle_code_array(df, id_col, text_col, shingle_len).persist(
-        StorageLevel.MEMORY_AND_DISK
+    The array frame is materialized BEFORE the explode: whole-stage
+    codegen inlines a computed generator input into the Generate loop, so
+    an unmaterialized ``explode(codes)`` re-evaluates the O(len)
+    code-array expression once per OUTPUT row — O(len²) per document,
+    measured 270 s vs ~2 s at sf0.1 (5000 docs x ~200 shingles). A lazy
+    ``localCheckpoint`` computes each row's array exactly once, on the
+    first action, and leaves no cache-manager entry behind (the same
+    discipline minhash_near_dups applies); at 100 TB this table is the
+    corpus's shingle table and would instead be a written intermediate."""
+    arr = shingle_code_array(df, id_col, text_col, shingle_len).localCheckpoint(
+        eager=False
     )
     return arr.select("id", F.explode("codes").alias("code"))
+
+
+def _signatures(arr: DataFrame, n_hashes: int) -> DataFrame:
+    """(id, mh0..mh{n-1}) over a code-array frame (id, codes): component
+    j is ``array_min(transform(codes, h_j))``."""
+    assert n_hashes <= len(MINHASH_A)
+    return arr.select(
+        "id",
+        *[
+            F.array_min(
+                F.transform(F.col("codes"), lambda c: minhash_col(c, j))
+            ).alias(f"mh{j}")
+            for j in range(n_hashes)
+        ],
+    )
 
 
 def minhash_signatures(
@@ -116,15 +130,9 @@ def minhash_signatures(
     code array — the whole signature stage is a narrow projection with ZERO
     shuffles (the earlier explode+groupBy formulation shuffled |doc|×|text|
     rows; this shuffles nothing)."""
-    assert n_hashes <= len(MINHASH_A)
-    arr = shingle_code_array(df, id_col, text_col, shingle_len)
-    cols = [
-        F.array_min(
-            F.transform(F.col("codes"), lambda c: minhash_col(c, j))
-        ).alias(f"mh{j}")
-        for j in range(n_hashes)
-    ]
-    return arr.select("id", *cols)
+    return _signatures(
+        shingle_code_array(df, id_col, text_col, shingle_len), n_hashes
+    )
 
 
 def banded_keys(
@@ -419,9 +427,11 @@ def minhash_near_dups(
     """Full MinHash→LSH→exact-verify near-dup pipeline (id_a, id_b, jaccard).
 
     The per-row code-array table feeds BOTH the (shuffle-free) signature
-    stage and the exact-Jaccard verification — cached so shingling runs
-    once; the only shuffles in the whole pipeline are the LSH bucket join
-    and the candidate-routed intersection counts.
+    stage and the exact-Jaccard verification — a lazy localCheckpoint, so
+    shingling runs once, on the pipeline's first action, and no
+    cache-manager entry outlives the call; the only shuffles in the whole
+    pipeline are the LSH bucket join and the candidate-routed intersection
+    counts.
 
     ``star=True`` swaps the all-pairs-per-bucket candidate generator for
     ``lsh_candidate_pairs_star`` (each bucket member pairs with the
@@ -434,23 +444,12 @@ def minhash_near_dups(
     of cluster members neither of which is the bucket min is not emitted
     — the right contract for DEDUP-style "keep one representative"
     consumers, not for exhaustive pair mining."""
-    from pyspark.storagelevel import StorageLevel
-
     rows_per_band = n_hashes // bands
-    arr = shingle_code_array(df, id_col, text_col, shingle_len).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    sigs = arr.select(
-        "id",
-        *[
-            F.array_min(
-                F.transform(F.col("codes"), lambda c: minhash_col(c, j))
-            ).alias(f"mh{j}")
-            for j in range(n_hashes)
-        ],
+    arr = shingle_code_array(df, id_col, text_col, shingle_len).localCheckpoint(
+        eager=False
     )
     gen = lsh_candidate_pairs_star if star else lsh_candidate_pairs
-    cands = gen(sigs, bands, rows_per_band)
+    cands = gen(_signatures(arr, n_hashes), bands, rows_per_band)
     sh = arr.select("id", F.explode("codes").alias("code"))
     return jaccard_pairs(sh, cands).filter(F.col("jaccard") >= threshold)
 

@@ -247,25 +247,6 @@ def g_pagerank_k3(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.ranks.select("id", F.round("pr", 9).alias("pr"))
 
 
-@query("g_pagerank_hubsplit_k3", oracle=_pagerank_unrolled_sql(PAGERANK_K))
-def g_pagerank_hubsplit_k3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same kernel, same unrolled oracle — but with hub_split_outdeg=1,
-    forcing every multi-out-edge source through scatter_gather's
-    BROADCAST hub path (and single-out-edge sources through the shuffle
-    path). Certifies at driver level that the skew-split physical
-    routing is value-identical to the plain scatter: the hub fix can
-    never drift the math (tests/test_skew_scatter.py pins the plan
-    shape; this row pins the numbers)."""
-    res = pagerank(
-        derived_edges(spark, sf_dir),
-        max_iter=PAGERANK_K,
-        tol=-1.0,
-        min_iter=0,
-        hub_split_outdeg=1,
-    )
-    return res.ranks.select("id", F.round("pr", 9).alias("pr"))
-
-
 @query(
     "g_pagerank_top20",
     oracle=_pagerank_unrolled_sql(PAGERANK_K).replace(
@@ -2185,8 +2166,8 @@ def g_degree_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini coefficient of the out-degree distribution — the single
     number that says HOW skewed the graph is (0 = regular, ->1 = one
     hub owns everything): the statistic behind every hub-cap/salting
-    decision this engine makes (two_hop/AA/square caps, the pagerank
-    hub split). DEFAULT = the binned form:
+    decision this engine makes (the two_hop/AA/square caps). DEFAULT =
+    the binned form:
     one map-side-combined aggregate folds V degree rows into the hybrid
     bin table (see GINI_D0 — identity bins below 1024, sqrt bins above),
     then the grouped rank-sum identity

@@ -11,7 +11,7 @@ pandas-UDF path, UTC session timezone so event-time queries are
 oracle-stable. AQE's skew join does not fix the hub-vertex hot-key
 pathology the reference documents at README.md:417-418: it never fires
 through PageRank's cached links (``graph/pagerank.py:scatter_gather``,
-tests/test_skew_scatter.py); the hub split there handles hot sources.
+tests/test_skew_scatter.py), so a hub's out-edges are joined by one task.
 """
 
 from __future__ import annotations

@@ -162,8 +162,48 @@ def _cached_entries(spark) -> int:
     return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
 
 
+def _jobs_in_group(spark, group: str, action) -> int:
+    """Spark jobs ``action`` submits, counted by job group (the status
+    store is fed asynchronously, so the listener bus is drained first)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pagerank_setup_runs_only_rank_init(spark):
+    """On a built graph, pagerank(max_iter=0) submits exactly the jobs of
+    rank init: Setup does not rescan the links cache."""
+    from pyspark.sql import functions as F
+
+    from pagerank_giraph_vs_mapreduce_spark.graph.pagerank import _init_ranks
+
+    edges = make_edges(spark, [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1), (2, 5)])
+    g = build_graph(edges)
+
+    def init_alone():
+        ranks, _ = _init_ranks(g.vertices, F.lit(1.0 / g.n_vertices).alias("pr"))
+        ranks.unpersist()
+
+    try:
+        n_init = _jobs_in_group(spark, "setup-jobs-init", init_alone)
+        n_run = _jobs_in_group(
+            spark,
+            "setup-jobs-pagerank",
+            lambda: pagerank(edges, max_iter=0, graph=g),
+        )
+    finally:
+        g.unpersist()
+    assert n_init >= 1
+    assert n_run == n_init
+
+
 def test_operators_release_their_caches(spark):
-    """Every PageRank-family, graph-kernel and GD-trainer call leaves
+    """Every PageRank-family, graph-kernel, dedup and GD-trainer call leaves
     Spark's cache manager holding as many entries as before it ran —
     PageRank's max_iter=0 included, where the result is the initial
     ranks. getPersistentRDDs() would not do here:
@@ -190,6 +230,10 @@ def test_operators_release_their_caches(spark):
         multi_bfs,
         sssp_distances,
     )
+    from pagerank_giraph_vs_mapreduce_spark.operators.dedup import (
+        minhash_near_dups,
+        shingles,
+    )
     from pagerank_giraph_vs_mapreduce_spark.operators.mlfit import logreg_gd
 
     edges = make_edges(spark, [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1), (2, 5)])
@@ -197,6 +241,14 @@ def test_operators_release_their_caches(spark):
     train = spark.createDataFrame(
         [(0.1, 0.9, 1.0), (0.8, 0.2, 0.0), (0.3, 0.7, 1.0), (0.9, 0.1, 0.0)],
         "f1 double, f2 double, y double",
+    )
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "the quick brown fox jumps over the lazy dog"),
+            (3, "pack my box with five dozen liquor jugs"),
+        ],
+        "doc_id bigint, text string",
     )
     calls = {
         "pagerank": lambda: pagerank(edges, max_iter=2).ranks,
@@ -217,6 +269,13 @@ def test_operators_release_their_caches(spark):
         "sssp_distances": lambda: sssp_distances(wedges, source=1).distances,
         "kcore_survivors": lambda: kcore_survivors(edges, k=2),
         "logreg_gd": lambda: logreg_gd(train, ["f1", "f2"], "y"),
+        # Distinct shingle lengths give each dedup call its own plan, so the
+        # cache manager cannot fold one call's entry into an earlier one's.
+        "shingles": lambda: shingles(docs, "doc_id", "text", shingle_len=4),
+        "minhash_near_dups": lambda: minhash_near_dups(docs, "doc_id", "text"),
+        "minhash_near_dups star": lambda: minhash_near_dups(
+            docs, "doc_id", "text", shingle_len=6, star=True
+        ),
     }
     for name, call in calls.items():
         before = _cached_entries(spark)

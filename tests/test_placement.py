@@ -158,12 +158,10 @@ def test_placed_pagerank_exact_equal_fewer_shuffle(spark):
     assert "part" in g_placed.links.columns
 
     r_hash = pagerank(
-        edges, max_iter=3, tol=0.0, min_iter=3, graph=g_hash,
-        hub_split_outdeg=None,
+        edges, max_iter=3, tol=0.0, min_iter=3, graph=g_hash
     )
     r_placed = pagerank(
-        edges, max_iter=3, tol=0.0, min_iter=3, graph=g_placed,
-        hub_split_outdeg=None,
+        edges, max_iter=3, tol=0.0, min_iter=3, graph=g_placed
     )
     assert r_hash.iterations == r_placed.iterations == 3
     h = {r["id"]: r["pr"] for r in r_hash.ranks.collect()}

@@ -1,18 +1,16 @@
-"""Hub-skew handling on the J1 scatter join (VERDICT r06 item 7).
+"""Hub-skew on the J1 scatter join.
 
 The reference documents the pathology (README.md:417-418: heavy-hub
-graphs dominate a worker). These tests pin BOTH halves of this repo's
-answer:
+graphs dominate a worker). These tests pin what holds for this engine:
 
 1. AQE's OptimizeSkewedJoin is structurally UNAVAILABLE to the superstep
    loop — the links side is cached pre-partitioned, so the join has no
    shuffle stage to split. Measured here, not assumed: the same join
    with uncached inputs and lowered thresholds DOES get ``skew=true``;
-   through the cache it does not.
-2. The plan-stable fix: ``scatter_gather(..., hub_ids)`` routes hub
-   sources through a broadcast of their (few) rank rows, so the hub edge
-   mass never concentrates — pinned by plan shape and by rank equality
-   against the unsplit path.
+   through the cache it does not. So a hub's out-edges, which the
+   src-partitioned cache holds on one partition, are joined by one task.
+2. Skew costs time, never exactness: PageRank on a graph where one
+   source owns 30 % of the edges matches the pure-Python oracle.
 """
 
 from __future__ import annotations
@@ -81,8 +79,7 @@ def test_aqe_skew_split_fires_on_uncached_scatter_join(spark, skew_confs):
 def test_aqe_cannot_split_the_cached_links_join(spark, skew_confs):
     """Through build_graph's cached pre-partitioned links, the same join
     reads InMemoryTableScan on the links side — no shuffle stage, so
-    OptimizeSkewedJoin never fires. This is WHY scatter_gather's explicit
-    hub split exists."""
+    OptimizeSkewedJoin never fires."""
     from pagerank_giraph_vs_mapreduce_spark.graph.builder import build_graph
     from pagerank_giraph_vs_mapreduce_spark.graph.pagerank import (
         scatter_gather,
@@ -98,96 +95,17 @@ def test_aqe_cannot_split_the_cached_links_join(spark, skew_confs):
         g.unpersist()
 
 
-def test_hub_split_broadcasts_hot_sources(spark, skew_confs):
-    """With hub_ids, the hot sources' scatter must ride a
-    BroadcastHashJoin (their edge rows stay put; only their rank rows
-    move) while cold sources keep the shuffle join."""
-    from pagerank_giraph_vs_mapreduce_spark.graph.builder import build_graph
-    from pagerank_giraph_vs_mapreduce_spark.graph.pagerank import (
-        scatter_gather,
-    )
-
-    g = build_graph(_hub_edges(spark))
-    try:
-        ranks = g.vertices.select("id", F.lit(0.001).alias("pr"))
-        split = scatter_gather(g.links, ranks, hub_ids=[0])
-        plan = _executed(split)
-        assert "BroadcastHashJoin" in plan, plan
-        # identical gather result to the unsplit path
-        base = {
-            r["id"]: r["contrib"]
-            for r in scatter_gather(g.links, ranks).collect()
-        }
-        got = {r["id"]: r["contrib"] for r in split.collect()}
-        assert set(got) == set(base)
-        assert all(abs(got[k] - base[k]) < 1e-12 for k in base)
-    finally:
-        g.unpersist()
-
-
-def test_pagerank_hub_split_matches_unsplit_ranks(spark):
-    """End-to-end: pagerank with hub_split_outdeg returns the same ranks
-    as without (same math, different physical routing)."""
+def test_skewed_pagerank_matches_oracle(spark):
+    """PageRank on the 30 %-hub graph equals tests/py_oracle.py's
+    independent implementation, superstep for superstep, within 1e-12."""
     from pagerank_giraph_vs_mapreduce_spark.graph.pagerank import pagerank
+    from tests.py_oracle import py_pagerank
 
     edges = _hub_edges(spark, n=20_000)
-    a = pagerank(edges, max_iter=3, tol=-1.0, min_iter=0)
-    b = pagerank(edges, max_iter=3, tol=-1.0, min_iter=0, hub_split_outdeg=1000)
-    ra = {r["id"]: r["pr"] for r in a.ranks.collect()}
-    rb = {r["id"]: r["pr"] for r in b.ranks.collect()}
-    assert set(ra) == set(rb)
-    assert all(abs(ra[k] - rb[k]) < 1e-12 for k in ra)
-
-
-def test_hub_split_auto_threshold(spark):
-    """VERDICT r07 item 7: the default hub_split_outdeg='auto' derives
-    the cap from max(HUB_AUTO_FLOOR, E // shuffle_partitions) at build
-    time — uniform graphs report no hub ids (plain scatter plan, no
-    Union/broadcast branch), a 50%-hub graph routes exactly the hub
-    through the broadcast branch with NO manual knob, and the ranks
-    match the unsplit run bit-for-bit."""
-    from pagerank_giraph_vs_mapreduce_spark.graph.builder import build_graph
-    from pagerank_giraph_vs_mapreduce_spark.graph.pagerank import (
-        HUB_AUTO_FLOOR,
-        pagerank,
-        scatter_gather,
-    )
-
-    # uniform: every outdeg ~ E/V, far below both floor and fair share
-    uniform = spark.range(20_000).select(
-        (F.col("id") % 500).alias("src"),
-        ((F.col("id") * 7 + 1) % 500).alias("dst"),
-    )
-    res_u = pagerank(uniform, max_iter=2, tol=-1.0, min_iter=0)
-    assert res_u.hub_ids == []
-
-    # hub: src 0 owns 20k distinct dsts; E=40k, P=8 -> fair share 5k,
-    # threshold = max(4096, 5000) = 5000 < 20000 -> auto-split fires
-    hub = spark.range(40_000).select(
-        F.when(F.col("id") < 20_000, F.lit(0))
-        .otherwise(F.col("id") % 100 + 1)
-        .cast("long")
-        .alias("src"),
-        F.col("id").cast("long").alias("dst"),
-    )
-    assert HUB_AUTO_FLOOR < 20_000
-    res_h = pagerank(hub, max_iter=2, tol=-1.0, min_iter=0)
-    assert res_h.hub_ids == [0]
-
-    # ranks identical to the explicitly-unsplit run
-    res_n = pagerank(hub, max_iter=2, tol=-1.0, min_iter=0, hub_split_outdeg=None)
-    ra = {r["id"]: r["pr"] for r in res_h.ranks.collect()}
-    rb = {r["id"]: r["pr"] for r in res_n.ranks.collect()}
-    assert ra == rb
-
-    # plan shape: the split branch unions a broadcast join; plain doesn't
-    # (ranks0 built union-free — g.vertices' universe lineage has a Union)
-    g = build_graph(hub)
-    ranks0 = spark.range(40_001).select(
-        F.col("id").cast("long").alias("id"),
-        F.lit(1.0 / g.n_vertices).alias("pr"),
-    )
-    split_plan = scatter_gather(g.links, ranks0, [0])._jdf.queryExecution().analyzed().toString()
-    plain_plan = scatter_gather(g.links, ranks0, [])._jdf.queryExecution().analyzed().toString()
-    assert "Union" in split_plan and "Union" not in plain_plan
-    g.unpersist()
+    pairs = [(r["src"], r["dst"]) for r in edges.collect()]
+    exp = py_pagerank(pairs, max_iter=5, tol=-1.0)
+    res = pagerank(edges, max_iter=5, tol=-1.0, min_iter=0)
+    got = {r["id"]: r["pr"] for r in res.ranks.collect()}
+    assert res.iterations == 5
+    assert set(got) == set(exp)
+    assert max(abs(got[k] - exp[k]) for k in exp) < 1e-12
