@@ -5,9 +5,12 @@ All hashing uses the cross-engine primitives in functions/hashing.py so
 every operator keeps an exact DuckDB oracle (integer arithmetic only).
 
 Scale notes (100 TB posture):
-- shingling AND MinHash/SimHash signatures are pure per-row array
-  expressions (char-code array → shingle-code array → array_min per hash):
-  ZERO shuffles; the whole signature stage is scan-bound.
+- shingling is a pure per-row array expression (char-code array →
+  shingle-code array), no shuffle. MinHash signatures explode the
+  materialised code array into one min-aggregate per doc: map-side
+  partial aggregation ships at most one row per doc per partition, and
+  every hash stays in whole-stage-codegen'd JVM code (a ``transform``
+  lambda is interpreted). SimHash stays a per-row ``transform``.
 - LSH banding re-keys by (band, band_key); hot buckets (boilerplate docs)
   are the skew risk — AQE skew-join splitting plus the candidate
   `distinct` keep the pair explosion bounded; exact-Jaccard verification
@@ -103,17 +106,18 @@ def shingles(
 
 
 def _signatures(arr: DataFrame, n_hashes: int) -> DataFrame:
-    """(id, mh0..mh{n-1}) over a code-array frame (id, codes): component
-    j is ``array_min(transform(codes, h_j))``."""
+    """(id, mh0..mh{n-1}) over a MATERIALISED code-array frame (id, codes):
+    component j is ``min(h_j(code))`` over the doc's exploded codes. ``arr``
+    must be a scan (a localCheckpoint), or the explode re-evaluates the
+    code-array expression per output row (see ``shingles``)."""
     assert n_hashes <= len(MINHASH_A)
-    return arr.select(
-        "id",
-        *[
-            F.array_min(
-                F.transform(F.col("codes"), lambda c: minhash_col(c, j))
-            ).alias(f"mh{j}")
-            for j in range(n_hashes)
-        ],
+    code = F.col("code")
+    return (
+        arr.select("id", F.explode("codes").alias("code"))
+        .groupBy("id")
+        .agg(
+            *[F.min(minhash_col(code, j)).alias(f"mh{j}") for j in range(n_hashes)]
+        )
     )
 
 
@@ -126,13 +130,16 @@ def minhash_signatures(
 ) -> DataFrame:
     """(id, mh0..mh{n-1}) MinHash signature.
 
-    Each component is ``array_min(transform(codes, h_j))`` over the per-row
-    code array — the whole signature stage is a narrow projection with ZERO
-    shuffles (the earlier explode+groupBy formulation shuffled |doc|×|text|
-    rows; this shuffles nothing)."""
-    return _signatures(
-        shingle_code_array(df, id_col, text_col, shingle_len), n_hashes
+    Each component is ``min(h_j(code))`` over the doc's shingle codes: the
+    code array is materialised with a lazy ``localCheckpoint`` (as in
+    ``shingles``), exploded, and min-aggregated by id. Map-side partial
+    aggregation ships at most one row per doc per input partition, so the
+    one shuffle carries |docs|-scale rows, not |doc|×|text|. Without the
+    checkpoint the explode of the computed array is quadratic per doc."""
+    arr = shingle_code_array(df, id_col, text_col, shingle_len).localCheckpoint(
+        eager=False
     )
+    return _signatures(arr, n_hashes)
 
 
 def banded_keys(
@@ -141,17 +148,22 @@ def banded_keys(
     """(id, band, bkey) LSH bucket rows — one row per band per doc. This
     is the durable index table of incremental dedup: written bucketed by
     (band, bkey), a new batch probes it with an equi-join and never
-    rescans the corpus."""
-    banded = None
-    for b in range(bands):
+    rescans the corpus.
+
+    One pass over ``sigs``: each row explodes into its ``bands`` rows. The
+    ``mh*`` inputs are aggregate outputs (``minhash_signatures``), so the
+    Generate does not recompute them per band."""
+
+    def band(b: int) -> Column:
         cols = [F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
-        part = sigs.select(
-            "id",
+        return F.struct(
             F.lit(b).alias("band"),
             F.concat_ws("_", *[c.cast("string") for c in cols]).alias("bkey"),
         )
-        banded = part if banded is None else banded.unionAll(part)
-    return banded
+
+    return sigs.select(
+        "id", F.explode(F.array(*[band(b) for b in range(bands)])).alias("b")
+    ).select("id", "b.band", "b.bkey")
 
 
 def write_band_index(
@@ -426,12 +438,16 @@ def minhash_near_dups(
 ) -> DataFrame:
     """Full MinHash→LSH→exact-verify near-dup pipeline (id_a, id_b, jaccard).
 
-    The per-row code-array table feeds BOTH the (shuffle-free) signature
-    stage and the exact-Jaccard verification — a lazy localCheckpoint, so
-    shingling runs once, on the pipeline's first action, and no
-    cache-manager entry outlives the call; the only shuffles in the whole
-    pipeline are the LSH bucket join and the candidate-routed intersection
-    counts.
+    The per-row code-array table feeds BOTH the signature stage and the
+    exact-Jaccard verification — a lazy localCheckpoint, so shingling runs
+    once, on the pipeline's first action, and no cache-manager entry
+    outlives the call. The shuffles are the signature min-aggregate (one
+    row per doc per partition after map-side combine), the LSH bucket join
+    and candidate ``distinct``, and the two joins that bring each
+    candidate's code arrays together. Verification is
+    ``size(array_intersect(ca, cb))`` per candidate: codes are distinct
+    per doc, so it equals ``jaccard_pairs``' count over the exploded
+    shingle table, without exploding or shuffling that table.
 
     ``star=True`` swaps the all-pairs-per-bucket candidate generator for
     ``lsh_candidate_pairs_star`` (each bucket member pairs with the
@@ -450,8 +466,20 @@ def minhash_near_dups(
     )
     gen = lsh_candidate_pairs_star if star else lsh_candidate_pairs
     cands = gen(_signatures(arr, n_hashes), bands, rows_per_band)
-    sh = arr.select("id", F.explode("codes").alias("code"))
-    return jaccard_pairs(sh, cands).filter(F.col("jaccard") >= threshold)
+    inter = F.size(F.array_intersect("ca", "cb"))
+    return (
+        cands.join(arr.withColumnsRenamed({"id": "id_a", "codes": "ca"}), "id_a")
+        .join(arr.withColumnsRenamed({"id": "id_b", "codes": "cb"}), "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            inter.alias("inter"),
+            (inter / (F.size("ca") + F.size("cb") - inter)).alias("jaccard"),
+        )
+        # a candidate sharing no shingle is no pair of jaccard_pairs'
+        .filter((F.col("inter") > 0) & (F.col("jaccard") >= threshold))
+        .drop("inter")
+    )
 
 
 SIMHASH_BITS = 31  # stays within the 31-bit universal hash range
@@ -640,7 +668,10 @@ def lsh_candidate_pairs_star(
     representative rather than every member, so per-EDGE thresholding is
     star-local; cluster-level dedup (the WCC canonicalization path) is
     unaffected."""
-    banded = banded_keys(sigs, bands, rows_per_band)
+    # A null id pairs with nothing either way; filtering it here gives the
+    # bucket-min branch the same inputs as the member branch (whose join
+    # infers the filter), so Spark reuses one signature exchange for both.
+    banded = banded_keys(sigs, bands, rows_per_band).filter(F.col("id").isNotNull())
     rep = banded.groupBy("band", "bkey").agg(F.min("id").alias("id_a"))
     return (
         banded.join(rep, ["band", "bkey"])

@@ -3,12 +3,17 @@ multimodal) on hand-built fixtures with known answers."""
 
 from __future__ import annotations
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
 from pagerank_giraph_vs_mapreduce_spark.operators.dedup import (
+    banded_keys,
     exact_dedup,
     jaccard_pairs,
+    lsh_candidate_pairs,
+    lsh_candidate_pairs_star,
     minhash_near_dups,
     minhash_signatures,
     shingles,
@@ -78,6 +83,66 @@ def test_jaccard_all_pairs(spark):
            jaccard_pairs(shingles(d, "doc_id", "text")).collect()}
     assert out[(1, 2)] == pytest.approx(1.0)
     assert (1, 3) not in out  # no shared shingles at all
+
+
+def planted_corpus(spark):
+    """40 random 25-word docs, and 16 copies of them with 1-6 words
+    substituted: near-duplicate pairs across a range of Jaccard values."""
+    rng = random.Random(7)
+    vocab = [f"w{i:03d}" for i in range(300)]
+    rows = [(i, [rng.choice(vocab) for _ in range(25)]) for i in range(40)]
+    for k in range(16):
+        words = list(rows[k][1])
+        for _ in range(1 + k % 6):
+            words[rng.randrange(len(words))] = rng.choice(vocab)
+        rows.append((100 + k, words))
+    return docs_df(spark, [(i, " ".join(w)) for i, w in rows])
+
+
+@pytest.mark.parametrize("star", [False, True])
+def test_minhash_near_dups_equals_exploded_verify(spark, star):
+    """The fused pipeline's array_intersect verify returns exactly the
+    pairs and doubles of jaccard_pairs over the exploded shingle table,
+    routed through the same LSH candidates."""
+    d = planted_corpus(spark)
+    n_hashes, bands, threshold = 24, 4, 0.5
+    gen = lsh_candidate_pairs_star if star else lsh_candidate_pairs
+    sigs = minhash_signatures(d, "doc_id", "text", n_hashes)
+    cands = gen(sigs, bands, n_hashes // bands)
+    want = sorted(
+        jaccard_pairs(shingles(d, "doc_id", "text"), cands)
+        .filter(F.col("jaccard") >= threshold)
+        .collect()
+    )
+    got = sorted(
+        minhash_near_dups(
+            d, "doc_id", "text", threshold, n_hashes, bands=bands, star=star
+        )
+        .select("id_a", "id_b", "jaccard")
+        .collect()
+    )
+    assert len(want) >= 8
+    assert got == want
+
+
+def test_banded_keys_equals_union_form(spark):
+    """One explode over the signature rows yields the rows of one select
+    per band, unioned."""
+    sigs = minhash_signatures(planted_corpus(spark), "doc_id", "text", 24)
+    bands, rows_per_band = 4, 6
+    union = None
+    for b in range(bands):
+        cols = [
+            F.col(f"mh{b * rows_per_band + r}").cast("string")
+            for r in range(rows_per_band)
+        ]
+        part = sigs.select(
+            "id", F.lit(b).alias("band"), F.concat_ws("_", *cols).alias("bkey")
+        )
+        union = part if union is None else union.unionAll(part)
+    got = banded_keys(sigs, bands, rows_per_band)
+    assert got.schema.simpleString() == union.schema.simpleString()
+    assert sorted(got.collect()) == sorted(union.collect())
 
 
 def test_simhash_identical_docs_equal(spark):

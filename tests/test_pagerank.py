@@ -231,7 +231,10 @@ def test_operators_release_their_caches(spark):
         sssp_distances,
     )
     from pagerank_giraph_vs_mapreduce_spark.operators.dedup import (
+        lsh_candidate_pairs,
+        lsh_candidate_pairs_star,
         minhash_near_dups,
+        minhash_signatures,
         shingles,
     )
     from pagerank_giraph_vs_mapreduce_spark.operators.mlfit import logreg_gd
@@ -275,6 +278,15 @@ def test_operators_release_their_caches(spark):
         "minhash_near_dups": lambda: minhash_near_dups(docs, "doc_id", "text"),
         "minhash_near_dups star": lambda: minhash_near_dups(
             docs, "doc_id", "text", shingle_len=6, star=True
+        ),
+        "minhash_signatures": lambda: minhash_signatures(
+            docs, "doc_id", "text", shingle_len=7
+        ),
+        "lsh_candidate_pairs": lambda: lsh_candidate_pairs(
+            minhash_signatures(docs, "doc_id", "text", shingle_len=3)
+        ),
+        "lsh_candidate_pairs_star": lambda: lsh_candidate_pairs_star(
+            minhash_signatures(docs, "doc_id", "text", shingle_len=2)
         ),
     }
     for name, call in calls.items():

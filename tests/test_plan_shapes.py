@@ -279,3 +279,69 @@ def test_vertex_table_reads_the_links_cache_not_the_text(spark, tmp_path):
         assert leaves == {"InMemoryRelation"}, leaves
     finally:
         g.unpersist()
+
+
+def _final_plan(df) -> str:
+    # AQE prints the Initial Plan too; its stages are not yet reused
+    return _executed_plan(df).split("== Initial Plan ==")[0]
+
+
+def _dedup_docs(spark, sf_oracle_dir):
+    return spark.read.parquet(f"{sf_oracle_dir}/documents.parquet").select(
+        "doc_id", "text"
+    )
+
+
+def test_minhash_explodes_read_the_checkpointed_code_array(spark, sf_oracle_dir):
+    """Every explode of the shingle-code array reads a scan of the
+    materialised array (through at most Filter/Project): an explode of
+    the computed array re-evaluates it per output row, quadratic per
+    document."""
+    from pagerank_giraph_vs_mapreduce_spark.operators.dedup import (
+        minhash_near_dups,
+        minhash_signatures,
+    )
+
+    docs = _dedup_docs(spark, sf_oracle_dir)
+    for df in (
+        minhash_signatures(docs, "doc_id", "text"),
+        minhash_near_dups(docs, "doc_id", "text"),
+    ):
+        lines = [
+            re.sub(r"^[\s:|+-]*(\*\(\d+\) )?", "", ln)
+            for ln in _final_plan(df).splitlines()
+        ]
+        gens = [
+            i for i, ln in enumerate(lines) if ln.startswith("Generate explode(codes")
+        ]
+        assert gens, lines
+        for i in gens:
+            child = next(
+                ln for ln in lines[i + 1 :] if not ln.startswith(("Filter", "Project"))
+            )
+            assert child.startswith("Scan ExistingRDD"), "\n".join(lines)
+
+
+def test_banded_keys_plans_no_union(spark, sf_oracle_dir):
+    """The band rows come from one explode over the signatures, not a
+    union of one select per band."""
+    from pagerank_giraph_vs_mapreduce_spark.operators.dedup import (
+        banded_keys,
+        minhash_signatures,
+    )
+
+    sigs = minhash_signatures(_dedup_docs(spark, sf_oracle_dir), "doc_id", "text")
+    plan = _final_plan(banded_keys(sigs, 4, 6))
+    assert "Union" not in plan, plan
+
+
+def test_minhash_near_dups_verifies_without_the_shingle_table(spark, sf_oracle_dir):
+    """The fused pipeline explodes the code array once (for the
+    signatures) and verifies on the arrays: no join on shingle code."""
+    from pagerank_giraph_vs_mapreduce_spark.operators.dedup import minhash_near_dups
+
+    docs = _dedup_docs(spark, sf_oracle_dir)
+    for star in (False, True):
+        plan = _final_plan(minhash_near_dups(docs, "doc_id", "text", star=star))
+        assert plan.count("Generate explode(codes") == 1, plan
+        assert not re.search(r"Join \[[^\]]*\bcode#", plan), plan
